@@ -6,8 +6,9 @@ placed; the sum of counts must equal the number of entity slots the
 generator filled; and the sum of `numInputRows` must equal the lines
 written.
 
-batch_mix: every result must equal DuckDB running the query's oracle
-SQL (SparkEntry.oracleSql) over the same parquet tables, compared row
+batch_mix: every result of the first pass and of the warm-up pass must
+equal DuckDB running the query's oracle SQL (SparkEntry.oracleSql) over
+the same parquet tables, compared row
 by row after sorting columns by name, with exact equality (NaN equals
 NaN).
 
@@ -78,8 +79,9 @@ def _eq(a, b):
     return a == b
 
 
-def check_batch(tables_dir, results_dir, oracles, names):
-    """Compare each named query's parquet result with its DuckDB oracle."""
+def check_batch(tables_dir, results_dirs, oracles, names):
+    """Compare each named query's parquet result in every one of
+    `results_dirs` (one per checked pass) with its DuckDB oracle."""
     import duckdb
 
     con = duckdb.connect()
@@ -92,30 +94,34 @@ def check_batch(tables_dir, results_dir, oracles, names):
         if name not in oracles:
             errors.append(f"{name}: no oracle SQL")
             continue
-        files = glob.glob(os.path.join(results_dir, name, "*.parquet"))
-        if not files:
-            errors.append(f"{name}: no result written")
-            continue
         try:
             o = con.execute(oracles[name])
             o_cols = [d[0] for d in o.description]
-            o_rows = o.fetchall()
-            s = con.execute(f"SELECT * FROM read_parquet({json.dumps(files)})")
-            s_cols = [d[0] for d in s.description]
-            s_rows = s.fetchall()
+            o_rows, o_cols = _canon(o.fetchall(), o_cols)
         except Exception as e:  # an oracle that cannot run is a failed check
             errors.append(f"{name}: {(str(e).splitlines() or ['error'])[0]}")
             continue
-        o_rows, o_cols = _canon(o_rows, o_cols)
-        s_rows, s_cols = _canon(s_rows, s_cols)
-        if o_cols != s_cols:
-            errors.append(f"{name}: columns oracle={o_cols} spark={s_cols}")
-        elif len(o_rows) != len(s_rows):
-            errors.append(f"{name}: rows oracle={len(o_rows)} spark={len(s_rows)}")
-        else:
-            bad = [i for i in range(len(o_rows)) if not _eq(o_rows[i], s_rows[i])]
-            if bad:
-                i = bad[0]
-                errors.append(f"{name}: {len(bad)}/{len(o_rows)} rows differ; first at {i}: "
-                              f"oracle={o_rows[i]} spark={s_rows[i]}")
+        for results_dir in results_dirs:
+            where = f"{name} ({os.path.basename(results_dir)})"
+            files = glob.glob(os.path.join(results_dir, name, "*.parquet"))
+            if not files:
+                errors.append(f"{where}: no result written")
+                continue
+            try:
+                s = con.execute(f"SELECT * FROM read_parquet({json.dumps(files)})")
+                s_cols = [d[0] for d in s.description]
+                s_rows, s_cols = _canon(s.fetchall(), s_cols)
+            except Exception as e:
+                errors.append(f"{where}: {(str(e).splitlines() or ['error'])[0]}")
+                continue
+            if o_cols != s_cols:
+                errors.append(f"{where}: columns oracle={o_cols} spark={s_cols}")
+            elif len(o_rows) != len(s_rows):
+                errors.append(f"{where}: rows oracle={len(o_rows)} spark={len(s_rows)}")
+            else:
+                bad = [i for i in range(len(o_rows)) if not _eq(o_rows[i], s_rows[i])]
+                if bad:
+                    i = bad[0]
+                    errors.append(f"{where}: {len(bad)}/{len(o_rows)} rows differ; first at {i}: "
+                                  f"oracle={o_rows[i]} spark={s_rows[i]}")
     return errors

@@ -2,15 +2,14 @@
 """Compare two sets of traced perfbench runs, workload by workload and
 layer by layer.
 
-    python3 perfbench/diff.py <before> <after> [--trace 0]
+    python3 perfbench/diff.py <before> <after>
 
 <before> and <after> are run records (the JSON files run.py writes to
 .bench_build/out/) or directories holding them; copy a set aside before
-the next runs overwrite it. Only traced records are read (per-layer
-metrics), or only untraced ones with --trace 0 (end-to-end metrics). A
-side with several records of one workload is reduced to per-metric
-medians. Metrics are grouped by layer, the part of the name before the
-last dot.
+the next runs overwrite it. Only traced records (per-layer metrics) are
+read. A side with several records of one workload is reduced to
+per-metric medians. Metrics are grouped by layer, the part of the name
+before the last dot.
 """
 import argparse
 import glob
@@ -20,13 +19,13 @@ import statistics
 import sys
 
 
-def load(path, trace):
+def load(path):
     files = sorted(glob.glob(os.path.join(path, "*.json"))) if os.path.isdir(path) else [path]
     runs = {}
     for f in files:
         with open(f) as fh:
             rec = json.load(fh)
-        if "workload" in rec and "metrics" in rec and f.endswith(f"-trace{trace}.json"):
+        if "workload" in rec and "metrics" in rec and f.endswith("-trace1.json"):
             runs.setdefault(rec["workload"], []).append(rec)
     out = {}
     for workload, recs in runs.items():
@@ -48,9 +47,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=1)
     a = ap.parse_args()
-    before, after = load(a.before, a.trace), load(a.after, a.trace)
+    before, after = load(a.before), load(a.after)
     if not before or not after:
         sys.exit("perfbench diff: no run records found")
     for workload in sorted(set(before) | set(after)):

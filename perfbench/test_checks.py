@@ -99,15 +99,18 @@ class BatchCheckTest(unittest.TestCase):
     def tearDownClass(cls):
         cls.tmp.cleanup()
 
-    def result(self, name, table):
-        d = os.path.join(self.tmp.name, "results", name)
+    def result(self, name, table, pass_dir="results"):
+        d = os.path.join(self.tmp.name, pass_dir, name)
         os.makedirs(d, exist_ok=True)
         pq.write_table(table, os.path.join(d, "part-0.parquet"))
 
-    def run_check(self, name, table):
+    def run_check(self, name, table, warm_table=None):
+        """Check a first-pass result and a warm-up-pass result (the same
+        table unless `warm_table` is given)."""
         self.result(name, table)
-        return check.check_batch(self.tables, os.path.join(self.tmp.name, "results"),
-                                 {name: self.SQL}, [name])
+        self.result(name, table if warm_table is None else warm_table, "results-warmup")
+        dirs = [os.path.join(self.tmp.name, d) for d in ("results", "results-warmup")]
+        return check.check_batch(self.tables, dirs, {name: self.SQL}, [name])
 
     def region(self, names=("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")):
         return pa.table({"r_name": list(names),
@@ -130,8 +133,13 @@ class BatchCheckTest(unittest.TestCase):
     def test_renamed_column_fails(self):
         self.assertTrue(self.run_check("cols", self.region().rename_columns(["name", "r_regionkey"])))
 
+    def test_wrong_warm_pass_result_fails(self):
+        errors = self.run_check("warm", self.region(), warm_table=self.region()[:4])
+        self.assertEqual(len(errors), 1)
+        self.assertIn("results-warmup", errors[0])
+
     def test_missing_result_fails(self):
-        errors = check.check_batch(self.tables, os.path.join(self.tmp.name, "results"),
+        errors = check.check_batch(self.tables, [os.path.join(self.tmp.name, "results")],
                                    {"absent": self.SQL}, ["absent"])
         self.assertTrue(errors)
 
