@@ -192,7 +192,7 @@ object StreamRun {
       t.drain()
       def st(p: StreamingQueryProgress) = p.stateOperators.head
       def medOf(f: StreamingQueryProgress => Double) = median(timed.map(f))
-      val stages = stagesOfPipeline(spark, pagesDir, last.toInt + 1)
+      val stages = stagesOfPipeline(spark, pagesDir, math.min(last.toInt + 1, StagePages))
       Map[String, Any](
         "source.latest_offset_ms" -> medOf(dur(_, "latestOffset")),
         "source.get_batch_ms" -> medOf(dur(_, "getBatch")),
@@ -216,7 +216,11 @@ object StreamRun {
       "attempted" -> timed.size, "failed" -> 0)
   }
 
-  /** Timed batch calls of the pipeline's stages over the pages the
+  /** Pages read by the timed batch calls of the pipeline's stages, so
+    * their figures do not depend on how many triggers a run times. */
+  val StagePages = 15
+
+  /** Timed batch calls of the pipeline's stages over the first pages the
     * stream consumed: parse, NER + explode, and the whole count. The
     * last two read the parsed text from a cache, so parse is not in them.
     */
