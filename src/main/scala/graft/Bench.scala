@@ -309,7 +309,11 @@ object Bench {
     // total/failed/calibration plus per-FAMILY subtotals and counts
     // (c/d/e/m/p/q/s/t — a dozen entries whatever the surface grows
     // to), and per-query detail lives in bench_detail.json only.
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","failed":$failedJson,"calibration_sec":$calibrationJson,"calibration_end_sec":$calibrationEndJson,"calibration_families":$familyProbesJson,"run_loaded":$loaded,"queries":${jsonMap(median, _.toString)},"queries_min":${jsonMap(_.min, _.toString, pick = _.all)},"queries_median_all":${jsonMap(median, _.toString, pick = _.all)},"queries_overlapped_gc_ms":${jsonMap(median, _.toLong.toString, _.gcMs.toDouble)},"queries_peak_heap_mb":${jsonMap(median, _.toLong.toString, _.peakMb.toDouble)},"sf":"$sfDir"}"""
+    // Parquet schema inferences vs memo reuses over the whole run
+    // (warm-up included): a reuse is a read that launched no
+    // footer-inference job.
+    val (schemasInferred, schemasReused) = Tables.schemaCounts
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","failed":$failedJson,"calibration_sec":$calibrationJson,"calibration_end_sec":$calibrationEndJson,"calibration_families":$familyProbesJson,"run_loaded":$loaded,"queries":${jsonMap(median, _.toString)},"queries_min":${jsonMap(_.min, _.toString, pick = _.all)},"queries_median_all":${jsonMap(median, _.toString, pick = _.all)},"queries_overlapped_gc_ms":${jsonMap(median, _.toLong.toString, _.gcMs.toDouble)},"queries_peak_heap_mb":${jsonMap(median, _.toLong.toString, _.peakMb.toDouble)},"tables_schema":{"inferred":$schemasInferred,"reused":$schemasReused},"sf":"$sfDir"}"""
     System.err.println(detail)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
     catch { case _: Throwable => () } // a read-only cwd must not kill the report

@@ -169,19 +169,6 @@ private[graft] object CorpusIndexes {
     fs.exists(path)
   }
 
-  /** Whether a table directory holds any parquet data file. A takedown
-    * wave can legitimately EMPTY a table (delete-all → fold): the
-    * bucketed writer emits no part files for zero rows, and a plain
-    * `spark.read.parquet` on such a directory dies with
-    * UNABLE_TO_INFER_SCHEMA — every footer-inference site must branch
-    * on this first.
-    */
-  private[graft] def hasParquetFiles(s: SparkSession, p: String): Boolean = {
-    val (fs, path) = hadoopPath(s, p)
-    fs.exists(path) &&
-      fs.listStatus(path).exists(_.getPath.getName.endsWith(".parquet"))
-  }
-
   /** Sidecar schema marker: the table's schema as JSON, written with
     * every generation so an EMPTY generation (takedown emptied it)
     * stays readable by a fresh session that has no catalog entry and
@@ -259,7 +246,7 @@ private[graft] object CorpusIndexes {
     require(lay.bucketCol == keyCol,
       s"TombLog $key: registered layout buckets on ${lay.bucketCol}, not $keyCol")
 
-    private def hasRows(s: SparkSession): Boolean = hasParquetFiles(s, path)
+    private def hasRows(s: SparkSession): Boolean = hasParquet(s, path, recursive = false)
 
     /** Append distinct ids (a frame bearing `keyCol`) to the log. */
     def append(ids: DataFrame): Unit =
@@ -567,7 +554,7 @@ private[graft] object CorpusIndexes {
         // none — the schema marker written with each generation is the
         // fallback that keeps the emptied index readable.
         val schemaDDL =
-          if (hasParquetFiles(s, path)) s.read.parquet(path).schema.toDDL
+          if (hasParquet(s, path, recursive = false)) s.read.parquet(path).schema.toDDL
           else readSchemaMarker(s, path).map(_.toDDL).getOrElse(sys.error(
             s"readBucketedTable: $path holds no parquet files and no " +
               "schema marker — not a generation this engine wrote"))
@@ -624,7 +611,7 @@ private[graft] object CorpusIndexes {
     // rewritten through the transform applied to an empty frame of the
     // current marker schema — a stale marker would otherwise register
     // the wrong DDL for the emptied table after such a fold.
-    if (!hasParquetFiles(s, path)) {
+    if (!hasParquet(s, path, recursive = false)) {
       readSchemaMarker(s, path).foreach { sch =>
         val empty = s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)

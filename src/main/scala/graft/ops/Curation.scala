@@ -131,8 +131,8 @@ object Curation {
       writeCampaign(s, dir, out)
       s.range(1).toDF("done")
     }
-    val ledger = s.read.parquet(s"$out/ledger")
-    val art = s.read.parquet(s"$out/corpus")
+    val ledger = parquet(s, s"$out/ledger")
+    val art = parquet(s, s"$out/corpus")
     val funnel = ledger.groupBy($"source").agg(
       count(lit(1)).as("n_docs_raw"),
       sum(when($"stage" === "quality", 1L).otherwise(0L)).as("n_quality_drop"),

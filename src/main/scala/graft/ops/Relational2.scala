@@ -54,7 +54,10 @@ object Relational2 {
       .agg(count(lit(1)).as("fp"))
       .groupBy($"l_returnflag")
       .agg(expr("percentile(l_extendedprice, 0.9, fp)").as("price_p90"))
-    qs.join(ps, Seq("l_returnflag"))
+    // Null-safe: a NULL flag is one group in each split aggregate, as
+    // in a single groupBy, so the rejoin must keep it.
+    qs.join(ps.withColumnRenamed("l_returnflag", "rf"), $"l_returnflag" <=> $"rf")
+      .drop("rf")
       .orderBy($"l_returnflag")
   }
 
@@ -199,7 +202,9 @@ object Relational2 {
     val ap = li.groupBy($"l_returnflag")
       .agg(expr("approx_percentile(l_quantity, 0.5, 1000)").as("a_q"),
         expr("approx_percentile(l_extendedprice, 0.9, 1000)").as("a_p"))
-    qh.join(ph, Seq("l_returnflag")).join(ap, Seq("l_returnflag"))
+    // Null-safe rejoin of the split aggregates, as in q14.
+    qh.join(ph.withColumnRenamed("l_returnflag", "rf_p"), $"l_returnflag" <=> $"rf_p")
+      .join(ap.withColumnRenamed("l_returnflag", "rf_a"), $"l_returnflag" <=> $"rf_a")
       .select($"l_returnflag", $"exact_med_qty", $"exact_p90_price",
         (abs($"a_q" - $"exact_med_qty") <= lit(1.0)).as("qty_within_tol"),
         (abs($"a_p" - $"exact_p90_price") <= $"exact_p90_price" * 0.02).as("price_within_tol"))

@@ -76,28 +76,11 @@ object StreamingAnnIngest {
                    deltaDir: String): DataFrame = {
     val idx = graft.ops.Similarity.loadIvfIndex(s, indexDir)
     val unioned =
-      if (!hasParquet(s, deltaDir)) idx
+      if (!graft.Tables.hasParquet(s, deltaDir, recursive = true)) idx
       else idx.unionByName(s.read.parquet(deltaDir)
         .select("vec_id", "embedding", "nrm", "cell_id"))
     // Deletes mask AFTER the union so a tombstone hits upserted rows
     // too (no-op when the root has no delete log).
     graft.ops.Similarity.maskIvfDeletes(unioned, indexDir)
-  }
-
-  /** True iff `dir` already holds at least one parquet part file
-    * (batch_id partition dirs included) — shared with the SRP door.
-    * Hadoop-FS IO so delta roots can live on any filesystem Spark
-    * reads, like the sidecar roots.
-    */
-  private[streaming] def hasParquet(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
   }
 }

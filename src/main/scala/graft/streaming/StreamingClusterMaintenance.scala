@@ -133,7 +133,7 @@ object StreamingClusterMaintenance {
             // onto EMPTY state — wrong labels with no error — and the
             // raw parquet path error the reader throws otherwise is
             // undiagnosable. Fail with the actual operator story.
-            require(StreamingAnnIngest.hasParquet(session, snap),
+            require(graft.Tables.hasParquet(session, snap, recursive = true),
               s"state snapshot for batch ${batchId - 1} missing at $snap: " +
                 "checkpoint and stateDir are out of sync (stateDir cleaned, " +
                 "or a reused checkpoint against a fresh stateDir); restore " +

@@ -50,7 +50,7 @@ object StreamingPeriodicity {
           if (batchId == 0L) arrivals
           else {
             val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(StreamingAnnIngest.hasParquet(s, prev),
+            require(graft.Tables.hasParquet(s, prev, recursive = true),
               s"state snapshot for batch ${batchId - 1} missing under " +
                 s"$stateDir — stateDir cleaned while the checkpoint survived?")
             s.read.parquet(prev).unionByName(arrivals)

@@ -61,7 +61,7 @@ object StreamingSrpIngest {
   def servingIndex(s: SparkSession, indexDir: String,
                    deltaDir: String): DataFrame = {
     val idx = graft.ops.Similarity.loadSrpIndex(s, indexDir)
-    if (!StreamingAnnIngest.hasParquet(s, deltaDir)) idx
+    if (!graft.Tables.hasParquet(s, deltaDir, recursive = true)) idx
     else idx.unionByName(s.read.parquet(deltaDir).select("vec_id", "sig"))
   }
 }

@@ -11,4 +11,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every event already posted to the listener bus has
+    * been delivered, so a `SparkListener` count taken next is complete.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

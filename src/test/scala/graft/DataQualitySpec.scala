@@ -552,4 +552,31 @@ class DataQualitySpec extends AnyFunSuite {
     // matched-date mass is thinner than uniform spreading assumes
     assert(actual.toDouble <= naive)
   }
+
+  test("q14/q23 split aggregates keep a NULL-flag group, as one groupBy does") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.expr
+    val d = java.nio.file.Files.createTempDirectory("graft-q14-null").toString
+    Seq[(Option[String], Double, Double)](
+      (Some("A"), 1.0, 10.0), (Some("A"), 3.0, 30.0), (Some("A"), 4.0, 20.0),
+      (Some("R"), 2.0, 5.0), (Some("R"), 8.0, 50.0),
+      (None, 5.0, 7.0), (None, 6.0, 70.0), (None, 6.0, 9.0))
+      .toDF("l_returnflag", "l_quantity", "l_extendedprice")
+      .write.parquet(s"$d/lineitem.parquet")
+    val li = graft.Tables.lineitem(s, d)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val single = li.groupBy($"l_returnflag").agg(
+      expr("percentile(l_quantity, 0.25D)").as("q25"),
+      expr("percentile(l_quantity, 0.5D)").as("median"),
+      expr("percentile(l_quantity, 0.75D)").as("q75"),
+      expr("percentile(l_extendedprice, 0.9D)").as("price_p90"))
+    val q14 = Relational2.quantityPercentiles(s, d)
+    assert(q14.columns.toSeq == single.columns.toSeq)
+    assert(rows(q14) == rows(single))
+    assert(q14.filter($"l_returnflag".isNull).count() == 1)
+    val q23 = Relational2.approxPercentileAudit(s, d)
+      .select($"l_returnflag", $"exact_med_qty", $"exact_p90_price")
+    assert(rows(q23) == rows(single.select($"l_returnflag", $"median", $"price_p90")))
+  }
 }
