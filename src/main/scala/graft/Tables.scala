@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.StructType
   *  - **Key:** the qualified path plus the session's values of every
   *    conf that shapes the footer → schema conversion
   *    (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`, partition
-  *    column type inference). [[events]] flips `nanosAsLong` before it
-  *    reads, and that changes `ts` from TIMESTAMP to BIGINT.
+  *    column type inference). [[events]] sets `nanosAsLong` before it
+  *    reads, which reads a TIMESTAMP(NANOS) `ts` as BIGINT.
   *  - **Fingerprint:** each entry keeps the name, length and
   *    modification time of every data file under the path, from one
   *    Hadoop-FS listing (no Spark job). A file rewritten at the same
