@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,6 +110,64 @@ class EntityPipelineSpec extends AnyFunSuite {
       val t = spark.table("ec_ckpt2").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(t == Map("spark" -> 2L)) // pre-restart state restored from checkpoint
+    } finally q2.stop()
+  }
+
+  test("each trigger's rows are spread round-robin over every core before parsing") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4) // TestSpark runs local[4]
+    val batches = Seq(
+      (1 to 40).map(i => article(s"Spark $i rises", s"alice meets Bob${('a' + i % 26).toChar}", null)),
+      (1 to 25).map(i => article("spark falls", null, s"Kafka and Carol${('a' + i % 7).toChar}")) :+ "not json")
+    val input = MemoryStream[String]
+    val raw = input.toDF().select($"value".cast("binary").as("value"))
+    val q = StreamJob.entityCounts(raw).writeStream
+      .format("memory").queryName("ec_spread").outputMode("complete").start()
+    try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      def roundRobin(p: SparkPlan) = p.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning == RoundRobinPartitioning(cores) => e
+      }
+      assert(roundRobin(plan).size == 1, plan)
+      val parses = plan.collect {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[JsonToStructs])) => p
+      }
+      assert(parses.size == 1, plan)
+      assert(roundRobin(parses.head.child).size == 1, plan) // the exchange sits below the parse
+
+      val streamed = spark.table("ec_spread").as[(String, Long)].collect().toMap
+      val batch = EntityPipeline.countEntities(EntityPipeline.parseArticles(
+        batches.flatten.toDF("value"))).as[(String, Long)].collect().toMap
+      assert(streamed.nonEmpty && streamed == batch)
+    } finally q.stop()
+  }
+
+  test("a checkpoint written without the spread restores under StreamJob.entityCounts") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_unspread").toString
+    val input = MemoryStream[String]
+    val raw = input.toDF().select($"value".cast("binary").as("value"))
+    def start(counts: DataFrame, name: String) = counts.writeStream
+      .format("memory").queryName(name).outputMode("complete")
+      .option("checkpointLocation", ckpt).start()
+
+    val q1 = start(EntityPipeline.countEntities(EntityPipeline.parseArticles(raw)), "ec_unspread1")
+    input.addData(article("spark one"), article("Spark Alice"))
+    q1.processAllAvailable()
+    q1.stop()
+
+    val q2 = start(StreamJob.entityCounts(raw), "ec_unspread2")
+    try {
+      input.addData(article("spark two"), article("Alice again"))
+      q2.processAllAvailable()
+      val t = spark.table("ec_unspread2").as[(String, Long)].collect().toMap
+      assert(t == Map("spark" -> 2L, "Spark" -> 1L, "Alice" -> 2L)) // totals continue
     } finally q2.stop()
   }
 
