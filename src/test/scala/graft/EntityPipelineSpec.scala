@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
@@ -7,6 +9,8 @@ import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.EntityPipeline
@@ -87,88 +91,117 @@ class EntityPipelineSpec extends AnyFunSuite {
       && json.contains("timestamp"))
   }
 
+  /** A fresh directory holding one JSON-lines page per entry of `pages`,
+    * each padded with entity-free articles to at least `minBytes`. */
+  private def pageDir(pages: Seq[Seq[String]], minBytes: Long): String = {
+    val dir = Files.createTempDirectory("graft_pages").toString
+    pages.zipWithIndex.foreach { case (p, i) => addPage(dir, s"p$i.json", p, minBytes) }
+    dir
+  }
+
+  private def addPage(dir: String, name: String, articles: Seq[String], minBytes: Long): Unit = {
+    val filler = article("filler " * 150)
+    val pad = Seq.fill((minBytes / filler.length).toInt + (if (minBytes > 0) 1 else 0))(filler)
+    Files.write(Paths.get(dir, name), (articles ++ pad).mkString("\n").getBytes("UTF-8"))
+  }
+
+  /** A file-source stream of the pages in `dir`, one page per trigger. */
+  private def filePages(dir: String): DataFrame = TestSpark.spark.readStream
+    .schema(StructType(Seq(StructField("value", StringType))))
+    .option("maxFilesPerTrigger", "1")
+    .text(dir)
+
+  private def lastPlan(q: StreamingQuery): SparkPlan =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+
+  private def roundRobins(p: SparkPlan): Seq[SparkPlan] = p.collect {
+    case e: ShuffleExchangeExec
+        if e.outputPartitioning == RoundRobinPartitioning(TestSpark.spark.sparkContext.defaultParallelism) => e
+  }
+
   test("checkpoint restart recovers aggregate state (ST5)") {
     val spark = TestSpark.spark
     import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val input = MemoryStream[String]
-    val raw = input.toDF().select($"value".cast("binary").as("value"))
-    def start(name: String) = StreamJob.entityCounts(raw).writeStream
-      .format("memory").queryName(name).outputMode("complete")
-      .option("checkpointLocation", ckpt).start()
+    val unspread = (raw: DataFrame) => EntityPipeline.countEntities(EntityPipeline.parseArticles(raw))
+    // (first run's plan, page padding, round-robin exchanges in the restarted run):
+    // small pages stay unspread; a checkpoint written without the spread
+    // restores under a spread plan, as the stateful layout is the same
+    Seq[(String, DataFrame => DataFrame, Long, Int)](
+      ("ec_ckpt", StreamJob.entityCounts, 0L, 0),
+      ("ec_unspread", unspread, StreamJob.SpreadBytes, 1)
+    ).foreach { case (name, firstPlan, minBytes, exchanges) =>
+      val ckpt = Files.createTempDirectory("graft_ckpt").toString
+      val dir = pageDir(Seq(Seq(article("spark one"), article("Spark Alice"))), minBytes)
+      def start(counts: DataFrame, n: Int) = counts.writeStream
+        .format("memory").queryName(s"$name$n").outputMode("complete")
+        .option("checkpointLocation", ckpt).start()
 
-    val q1 = start("ec_ckpt1")
-    input.addData(article("spark one"))
-    q1.processAllAvailable()
-    q1.stop()
+      val q1 = start(firstPlan(filePages(dir)), 1)
+      q1.processAllAvailable()
+      q1.stop()
 
-    val q2 = start("ec_ckpt2")
-    try {
-      input.addData(article("spark two"))
-      q2.processAllAvailable()
-      val t = spark.table("ec_ckpt2").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(t == Map("spark" -> 2L)) // pre-restart state restored from checkpoint
-    } finally q2.stop()
+      addPage(dir, "p1.json", Seq(article("spark two"), article("Alice again")), minBytes)
+      val q2 = start(StreamJob.entityCounts(filePages(dir)), 2)
+      try {
+        q2.processAllAvailable()
+        assert(roundRobins(lastPlan(q2)).size == exchanges, name)
+        val t = spark.table(s"${name}2").as[(String, Long)].collect().toMap
+        // pre-restart state restored from checkpoint
+        assert(t == Map("spark" -> 2L, "Spark" -> 1L, "Alice" -> 2L), name)
+      } finally q2.stop()
+    }
   }
 
-  test("each trigger's rows are spread round-robin over every core before parsing") {
+  test("a file-source trigger of at least SpreadBytes is spread round-robin over every core before parsing") {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val cores = spark.sparkContext.defaultParallelism
-    assert(cores == 4) // TestSpark runs local[4]
+    assert(spark.sparkContext.defaultParallelism == 4) // TestSpark runs local[4]
     val batches = Seq(
       (1 to 40).map(i => article(s"Spark $i rises", s"alice meets Bob${('a' + i % 26).toChar}", null)),
       (1 to 25).map(i => article("spark falls", null, s"Kafka and Carol${('a' + i % 7).toChar}")) :+ "not json")
-    val input = MemoryStream[String]
-    val raw = input.toDF().select($"value".cast("binary").as("value"))
-    val q = StreamJob.entityCounts(raw).writeStream
-      .format("memory").queryName("ec_spread").outputMode("complete").start()
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      def roundRobin(p: SparkPlan) = p.collect {
-        case e: ShuffleExchangeExec if e.outputPartitioning == RoundRobinPartitioning(cores) => e
-      }
-      assert(roundRobin(plan).size == 1, plan)
-      val parses = plan.collect {
-        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[JsonToStructs])) => p
-      }
-      assert(parses.size == 1, plan)
-      assert(roundRobin(parses.head.child).size == 1, plan) // the exchange sits below the parse
+    val memory = MemoryStream[String]
+    batches.foreach(b => memory.addData(b))
+    // (source, round-robin exchanges): large pages spread; the same
+    // articles in small pages or in a memory stream do not
+    Seq[(String, DataFrame, Int)](
+      ("ec_large", filePages(pageDir(batches, StreamJob.SpreadBytes)), 1),
+      ("ec_small", filePages(pageDir(batches, 0L)), 0),
+      ("ec_memory", memory.toDF(), 0)
+    ).foreach { case (name, raw, exchanges) =>
+      val q = StreamJob.entityCounts(raw).writeStream
+        .format("memory").queryName(name).outputMode("complete").start()
+      try {
+        q.processAllAvailable()
+        val plan = lastPlan(q)
+        assert(roundRobins(plan).size == exchanges, s"$name\n$plan")
+        val parses = plan.collect {
+          case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[JsonToStructs])) => p
+        }
+        assert(parses.size == 1, plan)
+        assert(roundRobins(parses.head.child).size == exchanges, plan) // below the parse
 
-      val streamed = spark.table("ec_spread").as[(String, Long)].collect().toMap
-      val batch = EntityPipeline.countEntities(EntityPipeline.parseArticles(
-        batches.flatten.toDF("value"))).as[(String, Long)].collect().toMap
-      assert(streamed.nonEmpty && streamed == batch)
-    } finally q.stop()
+        val streamed = spark.table(name).as[(String, Long)].collect().toMap
+        val batch = EntityPipeline.countEntities(EntityPipeline.parseArticles(
+          batches.flatten.toDF("value"))).as[(String, Long)].collect().toMap
+        assert(streamed.nonEmpty && streamed == batch, name)
+      } finally q.stop()
+    }
   }
 
-  test("a checkpoint written without the spread restores under StreamJob.entityCounts") {
+  test("triggerBytes: mean file size times maxFilesPerTrigger, or the total; None without files") {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_unspread").toString
-    val input = MemoryStream[String]
-    val raw = input.toDF().select($"value".cast("binary").as("value"))
-    def start(counts: DataFrame, name: String) = counts.writeStream
-      .format("memory").queryName(name).outputMode("complete")
-      .option("checkpointLocation", ckpt).start()
-
-    val q1 = start(EntityPipeline.countEntities(EntityPipeline.parseArticles(raw)), "ec_unspread1")
-    input.addData(article("spark one"), article("Spark Alice"))
-    q1.processAllAvailable()
-    q1.stop()
-
-    val q2 = start(StreamJob.entityCounts(raw), "ec_unspread2")
-    try {
-      input.addData(article("spark two"), article("Alice again"))
-      q2.processAllAvailable()
-      val t = spark.table("ec_unspread2").as[(String, Long)].collect().toMap
-      assert(t == Map("spark" -> 2L, "Spark" -> 1L, "Alice" -> 2L)) // totals continue
-    } finally q2.stop()
+    val dir = Files.createTempDirectory("graft_sizes").toString
+    Seq("a.json" -> 100, "b.json" -> 300, "_SUCCESS" -> 5000, ".a.json.crc" -> 5000)
+      .foreach { case (f, n) => Files.write(Paths.get(dir, f), Array.fill(n)('x'.toByte)) }
+    def text = spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
+    assert(StreamJob.triggerBytes(text.option("maxFilesPerTrigger", "1").text(dir)) == Some(200L))
+    assert(StreamJob.triggerBytes(text.option("maxFilesPerTrigger", "5").text(dir)) == Some(400L))
+    assert(StreamJob.triggerBytes(text.text(dir)) == Some(400L))
+    assert(StreamJob.triggerBytes(text.text(Files.createTempDirectory("graft_empty").toString)) == None)
+    assert(StreamJob.triggerBytes(MemoryStream[String].toDF()) == None)
   }
 
   test("dropDuplicatesWithinWatermark dedups by url within the watermark (ST7)") {
