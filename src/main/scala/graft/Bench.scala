@@ -6,20 +6,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Constraint propagation re-derives isnotnull() constraints from
-      // join keys and filters and substitutes the FULL defining
-      // expression of derived columns into scan-stage filters — for
-      // this engine's interpreted higher-order folds (MinHash/SimHash
-      // signatures) that re-evaluates the whole hash pipeline per row.
-      // No query here relies on inferred constraints (keys are never
-      // null); turning it off keeps every fold single-evaluation.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet-footer paths once so the first timed
     // query doesn't absorb session startup (~3-4 s of one-time cost that

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection: `runMain graft.Explain <sfDir> <query...>` prints
   * the formatted physical plan of each named query — the
@@ -11,20 +10,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Constraint propagation re-derives isnotnull() constraints from
-      // join keys and filters and substitutes the FULL defining
-      // expression of derived columns into scan-stage filters — for
-      // this engine's interpreted higher-order folds (MinHash/SimHash
-      // signatures) that re-evaluates the whole hash pipeline per row.
-      // No query here relies on inferred constraints (keys are never
-      // null); turning it off keeps every fold single-evaluation.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Constraint propagation re-derives isnotnull() constraints from
-      // join keys and filters and substitutes the FULL defining
-      // expression of derived columns into scan-stage filters — for
-      // this engine's interpreted higher-order folds (MinHash/SimHash
-      // signatures) that re-evaluates the whole hash pipeline per row.
-      // No query here relies on inferred constraints (keys are never
-      // null); turning it off keeps every fold single-evaluation.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional name filter for local iteration (regex, same as Bench);

@@ -19,19 +19,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * checkpoints) shares ONE audited implementation instead of each
   * re-deriving the registration-order and double-reap subtleties.
   */
-/** The RocksDB state-store provider `transformWithState` requires —
-  * ONE constant for every door on the new API. The provider binds
-  * when a query STARTS: a door that owns its start() sets it around
-  * the start and restores after ([[StreamingLru.run]]); a builder
-  * that returns a Dataset must leave the setting to whoever starts
-  * the query ([[StreamTransitions2.transitions]]).
-  */
-object RocksDbProvider {
-  val Key = "spark.sql.streaming.stateStore.providerClass"
-  val Value =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-}
-
 object ReapOnTerminate {
 
   def install(s: SparkSession, start: () => StreamingQuery,

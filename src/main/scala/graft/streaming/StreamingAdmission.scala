@@ -18,10 +18,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * compose — the union over any batch partitioning of the new slice
   * is bit-identical to the one-shot d25 batch query.
   *
-  * Exactly-once: the StreamingDedup convention — each batch
-  * overwrites its own `batch_id=<n>` directory, so an at-least-once
-  * replay after a crash rewrites the same rows instead of appending
-  * duplicates.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: per-batch cost scales with the BATCH (it is the small
   * side of every probe join; the gram set broadcasts); the historical
@@ -55,14 +52,9 @@ object StreamingAdmission {
     // (Dedup.deleteFromTextProbeIndex) between triggers is honored by
     // the next batch without a restart.
     val resolve = resolver(docs, histDocs, indexDir)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.admissionProbeIndexed(batch, resolve(), benchGrams)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+      graft.ops.Dedup.admissionProbeIndexed(batch, resolve(), benchGrams)
+    }
   }
 
   /** The d28 form of the door: the staged cascade PLUS the
@@ -77,14 +69,9 @@ object StreamingAdmission {
              outDir: String, checkpointDir: String,
              indexDir: Option[String] = None): StreamingQuery = {
     val resolve = resolver(docs, histDocs, indexDir)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.piiAdmissionProbeIndexed(batch, resolve(), benchGrams)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+      graft.ops.Dedup.piiAdmissionProbeIndexed(batch, resolve(), benchGrams)
+    }
   }
 
   /** Per-batch index resolution (shared by both door shapes) — the

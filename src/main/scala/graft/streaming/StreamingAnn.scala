@@ -20,10 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * union over any batch partitioning of a query set is bit-identical
   * to the one-shot batch run.
   *
-  * Exactly-once: the StreamingDedup convention — each batch overwrites
-  * its own `batch_id=<n>` partition directory, so an at-least-once
-  * replay after a crash rewrites the same rows instead of appending
-  * duplicates.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: per-batch cost scales with the BATCH (broadcast query
   * side), the corpus-sized index only streams through the cell
@@ -76,12 +73,5 @@ object StreamingAnn {
 
   private def runWith(queries: DataFrame, idx: DataFrame, outDir: String,
                       checkpointDir: String): StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        probeBatch(batch, idx)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(queries, outDir, checkpointDir)((batch, _) => probeBatch(batch, idx))
 }

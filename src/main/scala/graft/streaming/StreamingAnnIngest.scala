@@ -17,12 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Why deltas, not in-place appends: `Similarity.refreshIvfIndex` is
   * the right batch-maintenance form, but an at-least-once replay of an
   * APPEND duplicates rows — appends are not idempotent. The streaming
-  * door therefore uses the family's batch_id convention: each batch
-  * OVERWRITES its own `deltaDir/batch_id=<n>` directory, so a replayed
-  * batch rewrites identical rows in the same place (exactly-once
-  * output), and a later `refreshIvfIndex`/`compactIvfIndex` pass folds
-  * the accumulated deltas into the bucketed table on the maintenance
-  * cadence.
+  * door therefore writes through [[Door.sink]], whose batch-keyed
+  * overwrite of `deltaDir/batch_id=<n>` is exactly-once, and a later
+  * `refreshIvfIndex`/`compactIvfIndex` pass folds the accumulated
+  * deltas into the bucketed table on the maintenance cadence.
   *
   * Streaming == batch: each arrival's assignment depends only on the
   * frozen codebook, so the union of per-batch assignments over any
@@ -55,14 +53,9 @@ object StreamingAnnIngest {
     // (Never re-derive from index rows: a prior upsert may have
     // appended arrivals with vec_id < 16.)
     val cb = graft.ops.Similarity.loadIvfCodebook(s, indexDir).localCheckpoint()
-    arrivals.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.ivfAssignOverCodebook(batch, cb)
-          .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(arrivals, deltaDir, checkpointDir) { (batch, _) =>
+      graft.ops.Similarity.ivfAssignOverCodebook(batch, cb)
+    }
   }
 
   /** The serving view over a durable index plus its accumulated

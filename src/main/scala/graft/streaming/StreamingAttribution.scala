@@ -30,11 +30,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * keyed rows, never the stream's history — the property the plain
   * equi-join without the range predicate would NOT have.
   *
-  * Exactly-once: the family convention — each micro-batch overwrites
-  * its own `batch_id=<n>` directory, so an at-least-once replay after
-  * a crash (offset logged, commit missing) rewrites identical bytes
-  * with the join state restored from the checkpoint. The restart test
-  * forces the replay.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite, with the join state
+  * restored from the checkpoint; the restart test forces the replay.
   *
   * Scale shape: the join shuffles both streams once on user_id (the
   * same hash pass batch e10 pays), the range predicate evaluates
@@ -55,17 +52,10 @@ object StreamingAttribution {
           checkpointDir: String, watermark: String = "1 hour"): StreamingQuery = {
     val p = purchases.withWatermark("p_ts", watermark)
     val sg = signups.withWatermark("s_ts", watermark)
-    p.join(sg,
+    val joined = p.join(sg,
         expr("user_id = s_user_id AND s_ts <= p_ts AND " +
           "s_ts > p_ts - INTERVAL 7 DAYS"))
       .select(col("purchase_id"), col("user_id"), col("signup_id"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(joined, outDir, checkpointDir)((batch, _) => batch)
   }
 }

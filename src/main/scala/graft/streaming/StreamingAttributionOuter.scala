@@ -28,9 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * row if still unmatched — once the signup watermark passes p_ts),
   * so each store holds a bounded 7-day+delay window of keyed rows.
   *
-  * Exactly-once: the family convention — each micro-batch overwrites
-  * its own `batch_id=<n>` directory, so an at-least-once replay after
-  * a dropped commit rewrites identical bytes with the join state
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite, with the join state
   * restored from the checkpoint; the restart test forces the replay.
   *
   * Scale shape: one user_id shuffle per stream into the keyed state
@@ -49,18 +47,11 @@ object StreamingAttributionOuter {
           checkpointDir: String, watermark: String = "1 hour"): StreamingQuery = {
     val p = purchases.withWatermark("p_ts", watermark)
     val sg = signups.withWatermark("s_ts", watermark)
-    p.join(sg,
+    val joined = p.join(sg,
         expr("user_id = s_user_id AND s_ts <= p_ts AND " +
           "s_ts > p_ts - INTERVAL 7 DAYS"),
         "leftOuter")
       .select(col("purchase_id"), col("user_id"), col("signup_id"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(joined, outDir, checkpointDir)((batch, _) => batch)
   }
 }

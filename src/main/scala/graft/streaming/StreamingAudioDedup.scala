@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch partitioning equals `Multimodal.incrementalAudioDedup` (m18)
   * on the same slice, bit for bit (asserted in StreamingExtrasSpec).
   *
-  * Exactly-once: the family convention — each batch overwrites its own
-  * `batch_id=<n>` partition, so an at-least-once replay after a crash
-  * rewrites the same rows. The restart test forces that replay.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite; the restart test
+  * forces a replay.
   *
   * Scale shape: the batch side decodes only its own payloads and
   * broadcasts (≤10-long integer fingerprints); the index is the
@@ -56,13 +55,8 @@ object StreamingAudioDedup {
     val resolve = PerBatchIndex.resolver(indexDir,
       d => graft.ops.Multimodal.loadAudioIndex(newMedia.sparkSession, d),
       index)
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        probeBatch(batch, resolve())
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newMedia, outDir, checkpointDir) { (batch, _) =>
+      probeBatch(batch, resolve())
+    }
   }
 }

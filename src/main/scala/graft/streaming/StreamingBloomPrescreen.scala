@@ -17,9 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the union of per-batch probes is bit-identical to the one-shot
   * probe of the same arrivals.
   *
-  * Exactly-once: the StreamingAdmission convention — each batch
-  * overwrites its own `batch_id=<n>` directory, so an at-least-once
-  * replay rewrites the same rows instead of appending duplicates.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: the filter build is one treeAggregate over history at
   * run START (at 100 TB: per-digest-range shard filters, the d38
@@ -50,14 +48,9 @@ object StreamingBloomPrescreen {
     // the shared door lifecycle — see [[ReapOnTerminate]] for the
     // registration-order and double-reap reasoning.
     ReapOnTerminate.install(s,
-      start = () => docs.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ops.Dedup.bloomProbeBatch(batch, bc, digests)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start(),
+      start = () => Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+        graft.ops.Dedup.bloomProbeBatch(batch, bc, digests)
+      },
       reap = () => bc.destroy())
   }
 }

@@ -29,8 +29,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ([[graft.ops.TextOps.persistDsirModel]]). Arrivals never update
   * any of them; the run starts with NO corpus pass.
   *
-  * Exactly-once: the family convention — per-batch `batch_id=<n>`
-  * overwrite, so an at-least-once replay rewrites identical bytes.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: per trigger each gate keeps its audited solo plan
   * (batch-vs-bucketed-index equi-joins; broadcast gram set;
@@ -86,15 +85,10 @@ object StreamingCampaign {
         pin(graft.ops.TextOps.loadDsirModel(s, indexDir)))
     }
     ReapOnTerminate.install(s,
-      start = () => docs.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ops.Curation
-            .campaignProbeBatch(batch, idx, grams, u, b, c, jmBarCell, dsir)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start(),
+      start = () => Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+        graft.ops.Curation
+          .campaignProbeBatch(batch, idx, grams, u, b, c, jmBarCell, dsir)
+      },
       reap = reap)
   }
 }

@@ -23,12 +23,11 @@ import graft.functions.TextHashes.minhash_bands
   * for bit. (Contrast StreamingKmeans, whose float fold needs in-order
   * feeds; union-find needs nothing.)
   *
-  * Exactly-once under replay (the StreamingKmeans snapshot
-  * discipline): folding merges into state is not idempotent, so batch
-  * n reads the state snapshot written by batch n−1 and OVERWRITES
-  * `state/batch_id=n` — a replayed batch re-reads the unchanged n−1
-  * snapshot and rewrites identical bytes. The restart test forces the
-  * replay and proves it.
+  * Exactly-once under replay: folding merges into state is not
+  * idempotent, so the parent table goes through the [[Door]] snapshot
+  * fold — batch n folds into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]]) and overwrites its own. The restart test forces
+  * the replay and proves it.
   *
   * Scale shape: the per-batch probe is one equi-join of the batch's
   * band keys against the pre-capped disk-resident index (batch-sized);
@@ -120,35 +119,14 @@ object StreamingClusterMaintenance {
       .filter(r => graft.ops.Dedup.hasMaintLabels(session, r))
       .map(r => graft.ops.Dedup.loadMaintLabels(session, r))
       .getOrElse(graft.ops.Dedup.histClusterLabels(session, dir, cap))
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (batchId == 0L) Array.empty[(Long, Long)]
-          else {
-            val snap = s"$stateDir/batch_id=${batchId - 1}"
-            // A missing prior snapshot means the checkpoint and the
-            // state root disagree (stateDir cleaned while the
-            // checkpoint survived, or a reused checkpoint pointed at a
-            // fresh stateDir). Silently proceeding would fold batch n
-            // onto EMPTY state — wrong labels with no error — and the
-            // raw parquet path error the reader throws otherwise is
-            // undiagnosable. Fail with the actual operator story.
-            require(graft.Tables.hasParquet(session, snap, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing at $snap: " +
-                "checkpoint and stateDir are out of sync (stateDir cleaned, " +
-                "or a reused checkpoint against a fresh stateDir); restore " +
-                "the snapshot or clear the checkpoint to restart from batch 0")
-            session.read.parquet(snap)
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-          }
-        val state = step(batch, labels, bands, prev)
-        val sf = stateFrame(session, state).coalesce(1)
-        sf.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        sf.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newDocs, outDir, checkpointDir) { (batch, batchId) =>
+      val prev = Door.previous(session, stateDir, batchId)
+        .fold(Array.empty[(Long, Long)])(
+          _.collect().map(r => (r.getLong(0), r.getLong(1))))
+      val sf = stateFrame(session, step(batch, labels, bands, prev)).coalesce(1)
+      Door.snapshot(sf, stateDir, batchId)
+      sf
+    }
   }
 
   /** FOLD the accumulated per-batch state into the durable label
@@ -172,12 +150,10 @@ object StreamingClusterMaintenance {
     val p = new org.apache.hadoop.fs.Path(stateDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"foldIntoSidecar: state dir $stateDir does not exist")
-    val snaps = fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    require(snaps.nonEmpty,
+    val ids = Door.batchIds(fs, stateDir)
+    require(ids.nonEmpty,
       s"foldIntoSidecar: no batch_id=<n> snapshots under $stateDir")
-    val last = snaps.map(_.getPath.getName.stripPrefix("batch_id=").toLong).max
-    val state = s.read.parquet(s"$stateDir/batch_id=$last")
+    val state = s.read.parquet(Door.dir(stateDir, ids.max))
     val hist =
       if (graft.ops.Dedup.hasMaintLabels(s, labelsRoot))
         graft.ops.Dedup.loadMaintLabels(s, labelsRoot)
@@ -187,6 +163,8 @@ object StreamingClusterMaintenance {
     val folded = graft.ops.Dedup.foldMaintenanceLabels(state, hist)
       .localCheckpoint()
     graft.ops.Dedup.persistMaintLabels(folded, labelsRoot)
-    snaps.foreach(st => fs.delete(st.getPath, true))
+    ids.foreach { id =>
+      fs.delete(new org.apache.hadoop.fs.Path(Door.dir(stateDir, id)), true)
+    }
   }
 }

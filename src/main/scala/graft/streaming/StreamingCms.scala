@@ -17,12 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * under any split. Estimates served from it inherit the one-sided
   * guarantee (never under the true count) at every tick.
   *
-  * Exactly-once: the StreamingKmeans snapshot discipline — batch n
-  * reads the counter snapshot from `stateDir/batch_id=<n-1>` and
-  * overwrites `batch_id=<n>`, so an at-least-once replay folds the
-  * same arrivals into the same prior counters and rewrites identical
-  * bytes; a missing snapshot fails with the diagnosable
-  * StreamingClusterMaintenance message.
+  * Exactly-once: the [[Door]] snapshot fold — batch n folds its
+  * arrivals into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]], which also guards a missing snapshot) and
+  * overwrites its own.
   *
   * Scale shape: per-trigger cost is the batch's own user reduction
   * plus a 256-row merge; the emitted table is 256 rows per tick.
@@ -36,28 +34,14 @@ object StreamingCms {
     */
   def run(events: DataFrame, outDir: String, stateDir: String,
           checkpointDir: String): StreamingQuery = {
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrivals =
-          graft.ops.EventOps.cmsOver(graft.ops.EventOps.userCounts(batch))
-        val state =
-          if (batchId == 0L) arrivals
-          else {
-            val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(graft.Tables.hasParquet(s, prev, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing under " +
-                s"$stateDir — stateDir cleaned while the checkpoint survived?")
-            s.read.parquet(prev).unionByName(arrivals)
-              .groupBy(col("i"), col("j"))
-              .agg(sum(col("cnt")).as("cnt"))
-          }
-        val st = state.localCheckpoint()
-        st.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        st.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
+      val arrivals = graft.ops.EventOps.cmsOver(graft.ops.EventOps.userCounts(batch))
+      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+        .fold(arrivals)(_.unionByName(arrivals)
+          .groupBy(col("i"), col("j")).agg(sum(col("cnt")).as("cnt")))
+        .localCheckpoint()
+      Door.snapshot(st, stateDir, batchId)
+      st
+    }
   }
 }

@@ -18,14 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the union over any batch partitioning of the input is bit-identical
   * to one batch run (d15 on the same slice).
   *
-  * Exactly-once: the sink write is idempotent BY BATCH ID — each batch
-  * overwrites its own `batch_id=<n>` partition directory, so a batch
-  * replayed after a crash (offsets logged, commit missing) lands in
-  * the same place with the same rows instead of appending duplicates.
-  * foreachBatch + checkpoint gives at-least-once batch execution; the
-  * keyed overwrite upgrades the OUTPUT to exactly-once. The restart
-  * test forces a replay by deleting the last commit marker and proves
-  * the output is still exactly the batch answer.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite; the restart
+  * test forces a replay and proves the output is still the batch answer.
   *
   * Scale shape: identical to d15 — at 100 TB each index is
   * pre-bucketed/capped on disk, so per-batch probe cost scales with
@@ -43,9 +37,7 @@ object StreamingDedup {
 
   /** Start the job: `newDocs` is any streaming frame bearing
     * (doc_id, text); `hist` the static historical corpus; flagged rows
-    * land under `outDir/batch_id=<n>/` (a plain
-    * `spark.read.parquet(outDir)` reassembles the full output with the
-    * batch id as a partition column).
+    * land under `outDir/batch_id=<n>/`.
     *
     * The three historical probe indexes (md5 store, capped bands,
     * SimHash bands) are built and materialized HERE, once per run —
@@ -66,13 +58,8 @@ object StreamingDedup {
     val resolve = PerBatchIndex.resolver(indexDir,
       d => graft.ops.Dedup.loadTextProbeIndex(newDocs.sparkSession, d),
       graft.ops.Dedup.buildTextProbeIndex(hist, cap, materialize = true))
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.multiSignalProbeIndexed(batch, resolve())
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newDocs, outDir, checkpointDir) { (batch, _) =>
+      graft.ops.Dedup.multiSignalProbeIndexed(batch, resolve())
+    }
   }
 }

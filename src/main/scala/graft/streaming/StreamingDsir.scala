@@ -21,8 +21,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * arrivals (StreamingExtrasSpec pins it, plus the t49 equivalence:
   * the full corpus scored against its own model IS t49 row for row).
   *
-  * Exactly-once: the family convention — per-batch `batch_id=<n>`
-  * overwrite, so an at-least-once replay rewrites identical bytes.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: per trigger, one tokenize+explode over the BATCH, a
   * 64-row broadcast join, and a per-doc fold bounded at 64 entries —
@@ -47,14 +46,9 @@ object StreamingDsir {
       pin(graft.ops.TextOps.loadDsirModel(s, indexDir))
     }
     ReapOnTerminate.install(s,
-      start = () => docs.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ops.TextOps.dsirScoreBatch(batch, model)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start(),
+      start = () => Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+        graft.ops.TextOps.dsirScoreBatch(batch, model)
+      },
       reap = reap)
   }
 }

@@ -21,9 +21,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * watermark-closed prefix, bit for bit. Open tail sessions stay
   * unemitted — the rows a batch over a closed day would not see.
   *
-  * Exactly-once: the family convention — each batch overwrites its own
-  * `batch_id=<n>` directory, so an at-least-once replay after a crash
-  * rewrites identical finalized rows from checkpoint-restored state.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite, with the session state
+  * restored from the checkpoint.
   *
   * Scale shape: state is one open-session row per (user, gap-run)
   * holding (count, purchase count, running end), never raw events;
@@ -38,14 +37,8 @@ object StreamingDynamicSessions {
     */
   def run(events: DataFrame, outDir: String, checkpointDir: String,
           watermark: String = "1 hour"): StreamingQuery =
-    graft.ops.EventOps.dynamicSessionFrame(
-        events.withWatermark("ts", watermark))
-      .writeStream
-      .outputMode("append") // only watermark-closed sessions emit
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    // append (the default mode): only watermark-closed sessions emit
+    Door.sink(
+      graft.ops.EventOps.dynamicSessionFrame(events.withWatermark("ts", watermark)),
+      outDir, checkpointDir)((batch, _) => batch)
 }

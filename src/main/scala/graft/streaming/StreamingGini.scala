@@ -19,12 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * incrementally maintainable (one arrival can shift every rank), but
   * the rank input is the state table, never the log.
   *
-  * Exactly-once: the StreamingKmeans snapshot discipline — batch n
-  * reads the count snapshot from `stateDir/batch_id=<n-1>` and
-  * overwrites `batch_id=<n>`, so an at-least-once replay folds the
-  * same arrivals into the same prior state and rewrites identical
-  * bytes; a missing snapshot fails with the diagnosable
-  * StreamingClusterMaintenance message.
+  * Exactly-once: the [[Door]] snapshot fold — batch n folds its
+  * arrivals into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]], which also guards a missing snapshot) and
+  * overwrites its own.
   *
   * Scale shape: per-trigger cost is the batch's own user reduction
   * plus a user-cardinality merge and rank — bounded by the user base,
@@ -38,28 +36,14 @@ object StreamingGini {
     */
   def run(events: DataFrame, outDir: String, stateDir: String,
           checkpointDir: String): StreamingQuery = {
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrivals = graft.ops.EventOps.userCounts(batch)
-        val state =
-          if (batchId == 0L) arrivals
-          else {
-            val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(graft.Tables.hasParquet(s, prev, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing under " +
-                s"$stateDir — stateDir cleaned while the checkpoint survived?")
-            s.read.parquet(prev).unionByName(arrivals)
-              .groupBy(col("user_id"))
-              .agg(sum(col("c")).as("c"))
-          }
-        val st = state.localCheckpoint()
-        st.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        graft.ops.EventOps.giniOver(st)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
+      val arrivals = graft.ops.EventOps.userCounts(batch)
+      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+        .fold(arrivals)(_.unionByName(arrivals)
+          .groupBy(col("user_id")).agg(sum(col("c")).as("c")))
+        .localCheckpoint()
+      Door.snapshot(st, stateDir, batchId)
+      graft.ops.EventOps.giniOver(st)
+    }
   }
 }

@@ -16,11 +16,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch partitioning equals `Multimodal.incrementalImageDedup` (m13)
   * on the same slice, bit for bit (asserted in StreamingExtrasSpec).
   *
-  * Exactly-once: identical to [[StreamingDedup]] — each batch
-  * overwrites its own `batch_id=<n>` partition, so an at-least-once
-  * replay after a crash (offset logged, commit missing) rewrites the
-  * same rows in the same place instead of appending duplicates. The
-  * restart test forces that replay and proves it.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite; the restart test
+  * forces a replay.
   *
   * Scale shape: the BATCH side of the probe is broadcast (micro-batches
   * are small by definition); the corpus-sized index only streams
@@ -57,13 +54,8 @@ object StreamingImageDedup {
       d => graft.ops.Multimodal.loadImageIndex(newMedia.sparkSession, d)
         .select("doc_id", "ahash_hi", "ahash_lo"),
       index)
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        probeBatch(batch, resolve(), maxHamming)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newMedia, outDir, checkpointDir) { (batch, _) =>
+      probeBatch(batch, resolve(), maxHamming)
+    }
   }
 }

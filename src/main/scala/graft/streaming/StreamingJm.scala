@@ -20,8 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * bit-identical to the one-shot scoring of the same arrivals
   * (StreamingExtrasSpec pins it against the batch t54 core).
   *
-  * Exactly-once: the family convention — per-batch `batch_id=<n>`
-  * overwrite, so an at-least-once replay rewrites identical bytes.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: per trigger one tokenize+bigram explode over the
   * BATCH reduced to per-(doc, bigram) counts before the
@@ -48,14 +47,9 @@ object StreamingJm {
       (pin(runi), pin(rbg), pin(ctx))
     }
     ReapOnTerminate.install(s,
-      start = () => docs.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.ops.TextOps.jmScoreDocs(batch, u, b, c, barCell)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start(),
+      start = () => Door.sink(docs, outDir, checkpointDir) { (batch, _) =>
+        graft.ops.TextOps.jmScoreDocs(batch, u, b, c, barCell)
+      },
       reap = reap)
   }
 }

@@ -27,13 +27,11 @@ import graft.functions.VectorFunctions._
   * codebook is bit-identical to [[graft.ops.Similarity.kmeansStep]]
   * over everything that has arrived.
   *
-  * Exactly-once under replay (stateful twist on the StreamingDedup
-  * convention): folding is NOT idempotent, so the running state is
-  * SNAPSHOTTED per batch id — batch n reads the state written by
-  * batch n−1, folds its own rows, and overwrites `state/batch_id=n`
-  * and `out/batch_id=n`. A replayed batch re-reads the UNCHANGED
-  * n−1 snapshot and rewrites identical outputs. The restart test
-  * forces the replay and proves it.
+  * Exactly-once under replay: folding is NOT idempotent, so the
+  * running state goes through the [[Door]] snapshot fold — batch n
+  * folds its rows into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]]) and overwrites its own. The restart test forces
+  * the replay and proves it.
   *
   * Scale shape: assignment is the broadcast-codebook narrow argmax
   * (batch-sized); the state is K·64·256 rows — codebook-scale,
@@ -146,17 +144,12 @@ object StreamingKmeans {
   def run(vectors: DataFrame, seed: DataFrame, outDir: String,
           stateDir: String, checkpointDir: String): StreamingQuery = {
     val session = vectors.sparkSession
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (batchId == 0L) emptyState(session)
-          else session.read.parquet(s"$stateDir/batch_id=${batchId - 1}")
-        val (state, codebook) = step(batch, prev, seed)
-        state.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        codebook.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(vectors, outDir, checkpointDir) { (batch, batchId) =>
+      val prev = Door.previous(session, stateDir, batchId)
+        .getOrElse(emptyState(session))
+      val (state, codebook) = step(batch, prev, seed)
+      Door.snapshot(state, stateDir, batchId)
+      codebook
+    }
   }
 }

@@ -17,12 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * feed sum to the one-shot e26 audit exactly (counts add, maxes
   * max; proven in StreamingExtrasSpec).
   *
-  * Exactly-once for the stateful prefix: the StreamingKmeans snapshot
-  * discipline — batch n reads the running max from
-  * `stateDir/batch_id=<n-1>` and overwrites `batch_id=<n>`, so an
-  * at-least-once replay rewrites identical bytes; a missing snapshot
-  * (cleaned stateDir under a surviving checkpoint) fails with a
-  * diagnosable message, the StreamingClusterMaintenance guard.
+  * Exactly-once: the [[Door]] snapshot fold — batch n starts its
+  * prefix max from the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]], which also guards a missing snapshot) and
+  * overwrites its own.
   *
   * Scale shape: per-trigger cost is the batch-sized range-partitioned
   * prefix-max (driver holds |ranges| rows + ONE long of state);
@@ -37,27 +35,15 @@ object StreamingLatenessAudit {
     */
   def run(log: DataFrame, outDir: String, stateDir: String,
           checkpointDir: String): StreamingQuery = {
-    log.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val prefix =
-          if (batchId == 0L) Long.MinValue
-          else {
-            val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(graft.Tables.hasParquet(s, prev, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing under " +
-                s"$stateDir — stateDir cleaned while the checkpoint survived?")
-            s.read.parquet(prev).head.getLong(0)
-          }
-        val verdict = graft.ops.EventOps.latenessBatchAudit(batch, prefix)
-          .localCheckpoint()
-        verdict.drop("batch_max_us")
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        verdict.select(greatest(col("batch_max_us"), lit(prefix)).as("runmax_us"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(log, outDir, checkpointDir) { (batch, batchId) =>
+      val prefix = Door.previous(batch.sparkSession, stateDir, batchId)
+        .fold(Long.MinValue)(_.head.getLong(0))
+      val verdict = graft.ops.EventOps.latenessBatchAudit(batch, prefix)
+        .localCheckpoint()
+      Door.snapshot(
+        verdict.select(greatest(col("batch_max_us"), lit(prefix)).as("runmax_us")),
+        stateDir, batchId)
+      verdict.drop("batch_max_us")
+    }
   }
 }

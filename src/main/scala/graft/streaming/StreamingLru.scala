@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** One arriving record at the producer door: `seq` is the arrival
@@ -92,8 +92,8 @@ private class LruSetProcessor(maxsize: Int)
   * is `maxsize` strings whatever arrives (the StreamingCms
   * constant-state argument). Exactly-once: the state store VERSIONS
   * state per batch (replay of batch n reloads version n−1 — the
-  * transformWithState half) and the batch_id-keyed overwrite makes
-  * the output side idempotent (the family convention); the spec
+  * transformWithState half) and [[Door.sink]]'s batch-keyed overwrite
+  * makes the output side idempotent; the spec
   * forces a replay and pins identical bytes.
   */
 object StreamingLru {
@@ -115,26 +115,12 @@ object StreamingLru {
           outDir: String, checkpointDir: String): StreamingQuery = {
     val s = docs.sparkSession
     import s.implicits._
-    val prev = s.conf.getOption(RocksDbProvider.Key)
-    s.conf.set(RocksDbProvider.Key, RocksDbProvider.Value)
-    try {
-      docs.selectExpr("seq", "doc_id", "key").as[LruArrival]
+    Door.withRocksDb(s) {
+      val verdicts = docs.selectExpr("seq", "doc_id", "key").as[LruArrival]
         .groupByKey(_ => 0L)
         .transformWithState(new LruSetProcessor(maxsize),
           TimeMode.None(), OutputMode.Update())
-        .writeStream
-        .foreachBatch { (batch: Dataset[LruVerdict], batchId: Long) =>
-          batch.toDF().write.mode("overwrite")
-            .parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start()
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(RocksDbProvider.Key, v)
-        case None    => s.conf.unset(RocksDbProvider.Key)
-      }
+      Door.sink(verdicts.toDF(), outDir, checkpointDir)((batch, _) => batch)
     }
   }
 }

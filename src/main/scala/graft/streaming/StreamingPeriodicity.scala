@@ -19,12 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Proven in StreamingExtrasSpec with an out-of-order split plus
   * forced replay.
   *
-  * Exactly-once: the StreamingKmeans snapshot discipline — batch n
-  * reads the count snapshot from `stateDir/batch_id=<n-1>` and
-  * overwrites `batch_id=<n>`, so an at-least-once replay folds the
-  * same arrivals into the same prior state and rewrites identical
-  * bytes; a missing snapshot fails with the diagnosable
-  * StreamingClusterMaintenance message.
+  * Exactly-once: the [[Door]] snapshot fold — batch n folds its
+  * arrivals into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]], which also guards a missing snapshot) and
+  * overwrites its own.
   *
   * Scale shape: per-trigger cost is the batch's own (type, hour)
   * reduction plus a groups-sized merge — the state is |types|·|hours|
@@ -42,28 +40,14 @@ object StreamingPeriodicity {
     */
   def run(events: DataFrame, outDir: String, stateDir: String,
           checkpointDir: String): StreamingQuery = {
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrivals = graft.ops.EventOps.hourlyCounts(batch)
-        val state =
-          if (batchId == 0L) arrivals
-          else {
-            val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(graft.Tables.hasParquet(s, prev, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing under " +
-                s"$stateDir — stateDir cleaned while the checkpoint survived?")
-            s.read.parquet(prev).unionByName(arrivals)
-              .groupBy(col("event_type"), col("h"))
-              .agg(sum(col("c")).as("c"))
-          }
-        val st = state.localCheckpoint()
-        st.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        graft.ops.EventOps.periodicityOver(st)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
+      val arrivals = graft.ops.EventOps.hourlyCounts(batch)
+      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+        .fold(arrivals)(_.unionByName(arrivals)
+          .groupBy(col("event_type"), col("h")).agg(sum(col("c")).as("c")))
+        .localCheckpoint()
+      Door.snapshot(st, stateDir, batchId)
+      graft.ops.EventOps.periodicityOver(st)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** One arriving event at the history door: `seq` is the global arrival
@@ -85,8 +85,8 @@ private class RecentHistoryProcessor(k: Int)
   * ingest-abuse gate reads: "this user's 4th identical action inside
   * their last k events" is a burst, whatever the global rate.
   *
-  * Exactly-once: RocksDB-versioned state per batch plus the
-  * batch_id-keyed overwrite (the family convention); the spec forces
+  * Exactly-once: RocksDB-versioned state per batch plus
+  * [[Door.sink]]'s batch-keyed overwrite; the spec forces
   * a replay and pins identical bytes.
   */
 object StreamingRecentHistory {
@@ -100,26 +100,13 @@ object StreamingRecentHistory {
           outDir: String, checkpointDir: String): StreamingQuery = {
     val s = events.sparkSession
     import s.implicits._
-    val prev = s.conf.getOption(RocksDbProvider.Key)
-    s.conf.set(RocksDbProvider.Key, RocksDbProvider.Value)
-    try {
-      events.selectExpr("seq", "user_id", "event_type").as[HistArrival]
+    Door.withRocksDb(s) {
+      val verdicts = events
+        .selectExpr("seq", "user_id", "event_type").as[HistArrival]
         .groupByKey(_.user_id)
         .transformWithState(new RecentHistoryProcessor(k),
           TimeMode.None(), OutputMode.Update())
-        .writeStream
-        .foreachBatch { (batch: Dataset[HistVerdict], batchId: Long) =>
-          batch.toDF().write.mode("overwrite")
-            .parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .start()
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(RocksDbProvider.Key, v)
-        case None    => s.conf.unset(RocksDbProvider.Key)
-      }
+      Door.sink(verdicts.toDF(), outDir, checkpointDir)((batch, _) => batch)
     }
   }
 }

@@ -22,10 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * emitted rows equals batch e44 on the watermark-closed prefix, bit
   * for bit. Hours the watermark never passes stay open and unemitted.
   *
-  * Exactly-once: the family convention — per-batch overwrite of
-  * `outDir/batch_id=<n>`, replay after a dropped commit rewrites
-  * identical rows from checkpoint-restored state (both operators'
-  * state lives in the same checkpoint).
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite, with both operators'
+  * state restored from the same checkpoint.
   *
   * Scale shape: stage one holds one open-session row per (user,
   * gap-run) — e03's state; stage two holds one row per OPEN hour
@@ -41,14 +39,8 @@ object StreamingSessionChain {
     */
   def run(events: DataFrame, outDir: String, checkpointDir: String,
           watermark: String = "1 hour"): StreamingQuery =
-    graft.ops.EventOps.sessionCloseFrame(
-        events.withWatermark("ts", watermark))
-      .writeStream
-      .outputMode("append") // only watermark-closed HOURS emit
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    // append (the default mode): only watermark-closed HOURS emit
+    Door.sink(
+      graft.ops.EventOps.sessionCloseFrame(events.withWatermark("ts", watermark)),
+      outDir, checkpointDir)((batch, _) => batch)
 }

@@ -24,11 +24,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * log) stay open and unemitted, exactly the rows a nightly batch over
   * a closed day would not see either.
   *
-  * Exactly-once: the family convention — each batch overwrites its own
-  * `batch_id=<n>` directory, so an at-least-once replay after a crash
-  * (offset logged, commit missing) rewrites the same finalized rows,
-  * with the session state restored from the checkpoint. The restart
-  * test forces that replay.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite, with the session state
+  * restored from the checkpoint; the restart test forces the replay.
   *
   * Scale shape: state is one open-session row per (user, gap-run) —
   * each holding the partial aggregate (count, min/max µs, ≤|types| set,
@@ -44,14 +41,8 @@ object StreamingSessions {
     */
   def run(events: DataFrame, outDir: String, checkpointDir: String,
           watermark: String = "30 minutes"): StreamingQuery =
-    graft.ops.EventOps.sessionFeatureFrame(
-        events.withWatermark("ts", watermark))
-      .writeStream
-      .outputMode("append") // only watermark-closed sessions emit
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    // append (the default mode): only watermark-closed sessions emit
+    Door.sink(
+      graft.ops.EventOps.sessionFeatureFrame(events.withWatermark("ts", watermark)),
+      outDir, checkpointDir)((batch, _) => batch)
 }

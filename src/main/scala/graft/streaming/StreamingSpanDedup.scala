@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch transform IS `Dedup.incrementalSpanRows`, shared verbatim —
   * so the union over any batch split equals batch d36 row for row.
   *
-  * Exactly-once: the family convention — per-batch `batch_id=<n>`
-  * overwrite, replay rewrites identical bytes (no cross-batch state
-  * at all here; the replay test is the cheap end of the family).
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite (no cross-batch
+  * state at all here; the replay test is the cheap end of the family).
   *
   * Scale shape: only the BATCH hashes text; the probe is one
   * semi-join of batch gram rows against the pre-built gram set —
@@ -40,13 +39,8 @@ object StreamingSpanDedup {
     val idx = indexDir
       .map(root => graft.ops.Dedup.loadSpanGramIndex(session, root))
       .getOrElse(index.localCheckpoint())
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Dedup.incrementalSpanRows(batch, idx, l)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newDocs, outDir, checkpointDir) { (batch, _) =>
+      graft.ops.Dedup.incrementalSpanRows(batch, idx, l)
+    }
   }
 }

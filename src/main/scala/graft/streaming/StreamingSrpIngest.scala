@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * delta directory, and a batch's output depends on nothing but the
   * batch (the strongest possible replay story).
   *
-  * Exactly-once: the family's batch_id convention — each batch
-  * OVERWRITES its own `deltaDir/batch_id=<n>` directory, so an
-  * at-least-once replay rewrites identical rows in place. A later
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite of
+  * `deltaDir/batch_id=<n>`. A later
   * `Similarity.refreshSrpIndex`/`compactSrpIndex` pass folds deltas
   * into the bucketed table on the maintenance cadence.
   *
@@ -44,14 +43,7 @@ object StreamingSrpIngest {
     */
   def run(arrivals: DataFrame, deltaDir: String,
           checkpointDir: String): StreamingQuery =
-    arrivals.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hashBatch(batch)
-          .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(arrivals, deltaDir, checkpointDir)((batch, _) => hashBatch(batch))
 
   /** The serving view over a durable index plus its accumulated
     * streamed deltas — what any Hamming probe reads to serve

@@ -17,12 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * windows recompute from state, never from arrival order). Proven in
   * StreamingExtrasSpec with an out-of-order split plus forced replay.
   *
-  * Exactly-once: the StreamingKmeans snapshot discipline — batch n
-  * reads the activity snapshot from `stateDir/batch_id=<n-1>` and
-  * overwrites `batch_id=<n>`, so an at-least-once replay folds the
-  * same arrivals into the same prior state and rewrites identical
-  * bytes; a missing snapshot fails with the diagnosable
-  * StreamingClusterMaintenance message.
+  * Exactly-once: the [[Door]] snapshot fold — batch n folds its
+  * arrivals into the `stateDir` snapshot of batch n−1
+  * ([[Door.previous]], which also guards a missing snapshot) and
+  * overwrites its own.
   *
   * Scale shape: per-trigger cost is the batch's own (day, user)
   * reduction plus a distinct-union against state bounded by
@@ -41,26 +39,13 @@ object StreamingStickiness {
     */
   def run(events: DataFrame, outDir: String, stateDir: String,
           checkpointDir: String): StreamingQuery = {
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrivals = graft.ops.EventOps.dayUserActivity(batch)
-        val state =
-          if (batchId == 0L) arrivals
-          else {
-            val prev = s"$stateDir/batch_id=${batchId - 1}"
-            require(graft.Tables.hasParquet(s, prev, recursive = true),
-              s"state snapshot for batch ${batchId - 1} missing under " +
-                s"$stateDir — stateDir cleaned while the checkpoint survived?")
-            s.read.parquet(prev).union(arrivals).distinct()
-          }
-        val st = state.localCheckpoint()
-        st.write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
-        graft.ops.EventOps.stickinessOver(st)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
+      val arrivals = graft.ops.EventOps.dayUserActivity(batch)
+      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+        .fold(arrivals)(_.union(arrivals).distinct())
+        .localCheckpoint()
+      Door.snapshot(st, stateDir, batchId)
+      graft.ops.EventOps.stickinessOver(st)
+    }
   }
 }

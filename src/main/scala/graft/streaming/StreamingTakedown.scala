@@ -23,8 +23,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * makes a crash-replayed batch idempotent: re-appending a wave that
   * already landed appends nothing (the anti-join sees the log the
   * crashed attempt wrote), and state-derived counts recompute
-  * identically, so the batch_id-keyed overwrite rewrites the same
-  * bytes.
+  * identically, so [[Door.sink]]'s batch-keyed overwrite rewrites the
+  * same bytes.
   *
   * Ordering/concurrency: appends to the log are serialized BY THE
   * DOOR (one micro-batch at a time — the lifecycle's maintenance-
@@ -60,28 +60,23 @@ object StreamingTakedown {
     */
   def run(deletes: DataFrame, indexDir: String, outDir: String,
           checkpointDir: String): StreamingQuery =
-    deletes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrivals = batch.select(col("doc_id")).distinct()
-        // pin the not-yet-tombstoned set BEFORE appending: the append
-        // job must not scan the very log generation it is extending
-        // through a lazy anti-join (and a replayed wave must observe
-        // the log state its crashed attempt left, not a moving one)
-        val newIds = graft.ops.Dedup.loadTextProbeTombstones(s, indexDir)
-          .map(t => arrivals.join(
-            t.withColumnRenamed("hist_doc", "doc_id"), Seq("doc_id"),
-            "left_anti"))
-          .getOrElse(arrivals)
-          .localCheckpoint()
-        val nArrived = arrivals.count()
-        val nNew = newIds.count()
-        if (nNew > 0L)
-          graft.ops.Dedup.deleteFromTextProbeIndex(newIds, indexDir)
-        auditBatch(s, indexDir, nArrived, nNew)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(deletes, outDir, checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val arrivals = batch.select(col("doc_id")).distinct()
+      // pin the not-yet-tombstoned set BEFORE appending: the append
+      // job must not scan the very log generation it is extending
+      // through a lazy anti-join (and a replayed wave must observe
+      // the log state its crashed attempt left, not a moving one)
+      val newIds = graft.ops.Dedup.loadTextProbeTombstones(s, indexDir)
+        .map(t => arrivals.join(
+          t.withColumnRenamed("hist_doc", "doc_id"), Seq("doc_id"),
+          "left_anti"))
+        .getOrElse(arrivals)
+        .localCheckpoint()
+      val nArrived = arrivals.count()
+      val nNew = newIds.count()
+      if (nNew > 0L)
+        graft.ops.Dedup.deleteFromTextProbeIndex(newIds, indexDir)
+      auditBatch(s, indexDir, nArrived, nNew)
+    }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * "top-k per closed event-time window": arriving events feed a
   * watermarked tumbling-day count aggregate; when the watermark closes
   * a window, ALL of that window's finalized (day, type, n) rows emit in
-  * the same micro-batch (append mode), and foreachBatch ranks them with
+  * the same micro-batch (append mode), and the sink ranks them with
   * the SAME frame e16 uses (`EventOps.rankWindowCounts`), shipping the
   * top-k + share per day.
   *
@@ -21,18 +21,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * trigger. The production pattern is exactly this two-stage shape:
   * the STATE (per-window counts) lives in the watermarked aggregate,
   * and the RANK — a per-window, |event types|-row computation — runs
-  * on finalization inside foreachBatch. Because a window's groups all
+  * on finalization inside the sink. Because a window's groups all
   * finalize at the same trigger, each batch ranks complete windows
   * only, so the streamed leaderboard equals batch e16 on every closed
   * window bit for bit (StreamingExtrasSpec asserts it, plus replay).
   *
-  * Exactly-once: the StreamingDedup convention — each batch overwrites
-  * its own `batch_id=<n>` directory, so an at-least-once replay after
-  * a crash rewrites the same rows instead of appending duplicates.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite.
   *
   * Scale shape: the streaming state is the (window, type) count table
   * — bounded by |types| per open window, evicted at the watermark; the
-  * foreachBatch rank sees only the finalized rows of closing windows
+  * per-batch rank sees only the finalized rows of closing windows
   * (at most |types| per window), never raw events.
   */
 object StreamingTopK {
@@ -51,19 +49,12 @@ object StreamingTopK {
           k: Int = 3, watermark: String = "1 day"): StreamingQuery = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val counts = events
       .withWatermark("ts", watermark)
       .groupBy(window($"ts", "1 day"), $"event_type")
       .agg(count(lit(1)).as("n"))
       .select($"window.start".as("day"), $"event_type", $"n")
-      .writeStream
-      .outputMode("append") // only watermark-closed windows emit
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rankBatch(batch, k)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    // append (the default mode): only watermark-closed windows emit
+    Door.sink(counts, outDir, checkpointDir)((batch, _) => rankBatch(batch, k))
   }
 }

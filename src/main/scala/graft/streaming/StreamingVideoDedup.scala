@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch partitioning equals `Multimodal.incrementalVideoDedup` (m17)
   * on the same slice, bit for bit (asserted in StreamingExtrasSpec).
   *
-  * Exactly-once: the family convention — each batch overwrites its own
-  * `batch_id=<n>` partition, so an at-least-once replay after a crash
-  * rewrites the same rows. The restart test forces that replay.
+  * Exactly-once: [[Door.sink]]'s batch-keyed overwrite; the restart test
+  * forces a replay.
   *
   * Scale shape: the batch side decodes only its own payloads; the
   * index is the digest-keyed frame sidecar aggregate (24 bytes/row),
@@ -60,13 +59,8 @@ object StreamingVideoDedup {
     val resolve = PerBatchIndex.resolver(indexDir,
       d => graft.ops.Multimodal.loadVideoFrameIndex(newMedia.sparkSession, d),
       index)
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        probeBatch(batch, resolve())
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Door.sink(newMedia, outDir, checkpointDir) { (batch, _) =>
+      probeBatch(batch, resolve())
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -24,11 +23,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object TopologyDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.GraftSession.builder(4)
       .appName("graft-topology-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -7,16 +7,9 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
+    val s = GraftSession.builder(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      // see Bench.scala: inferred-constraint inlining re-evaluates folds
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -36,19 +36,13 @@ class StateStoreReadSpec extends AnyFunSuite {
 
       // The door is STILL RUNNING. Read its state store as a batch
       // frame (the provider class must match the door's at read time).
-      val prev = spark.conf.getOption(graft.streaming.RocksDbProvider.Key)
-      spark.conf.set(graft.streaming.RocksDbProvider.Key,
-        graft.streaming.RocksDbProvider.Value)
       val (storedKeys, storedMaxSeq) =
-        try {
+        graft.streaming.Door.withRocksDb(spark) {
           val state = spark.read.format("statestore")
             .option("stateVarName", "lru").load(ckpt)
           val rows = state.selectExpr("value.keys", "value.maxSeq").collect()
           assert(rows.length == 1, s"one constant group key, got ${rows.length}")
           (rows.head.getSeq[String](0).toList, rows.head.getLong(1))
-        } finally prev match {
-          case Some(v) => spark.conf.set(graft.streaming.RocksDbProvider.Key, v)
-          case None    => spark.conf.unset(graft.streaming.RocksDbProvider.Key)
         }
 
       // Cross-check against the door's OWN OUTPUT: replay the emitted
@@ -109,10 +103,7 @@ class StateStoreReadSpec extends AnyFunSuite {
       input.addData(arrivals.drop(arrivals.length / 2).toSeq)
       q.processAllAvailable()
       // the door is STILL RUNNING — inspect all three typed state vars
-      val prev = spark.conf.getOption(graft.streaming.RocksDbProvider.Key)
-      spark.conf.set(graft.streaming.RocksDbProvider.Key,
-        graft.streaming.RocksDbProvider.Value)
-      try {
+      graft.streaming.Door.withRocksDb(spark) {
         def read(name: String) = spark.read.format("statestore")
           .option("stateVarName", name).load(ckpt)
         // ListState reads one row per element; compare per-user element
@@ -139,9 +130,6 @@ class StateStoreReadSpec extends AnyFunSuite {
           .selectExpr("key.value AS u", "value.value AS m")
           .as[(Long, Long)].collect().toMap
         assert(gotSeq == last.toMap, "ValueState max-seen seqs diverge")
-      } finally prev match {
-        case Some(v) => spark.conf.set(graft.streaming.RocksDbProvider.Key, v)
-        case None    => spark.conf.unset(graft.streaming.RocksDbProvider.Key)
       }
     } finally q.stop()
   }
@@ -156,44 +144,36 @@ class StateStoreReadSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val (pk, pv) = (graft.streaming.RocksDbProvider.Key,
-      graft.streaming.RocksDbProvider.Value)
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk, pv)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssr3_ckpt").toString
-    def ts(x: String) = java.sql.Timestamp.valueOf(x)
-    val horizon = 60000L
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-    val stream = input.toDF().toDF("user_id", "ts", "event_id", "event_type")
-    val q = graft.streaming.StreamTransitions2
-      .transitions(stream, watermark = "1 minute", horizonMs = horizon).toDF()
-      .writeStream.format("memory").queryName("ssr3_trans")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      def timers(): Map[Long, Long] = spark.read.format("statestore")
-        .option("readRegisteredTimers", "true").load(ckpt)
-        .selectExpr("key.value AS u", "expiration_timestamp_ms AS exp")
-        .as[(Long, Long)].collect().toMap
-      val (t1, t2) = (ts("2024-01-01 00:00:00"), ts("2024-01-02 00:00:00"))
-      input.addData((1L, t1, 1L, "view")); q.processAllAvailable()
-      assert(timers() == Map(1L -> (t1.getTime + horizon)),
-        "one pending timer at last-event + horizon after batch 1")
-      // batch 2 advances the watermark a day: user 1's timer FIRES
-      // (state evicted) and user 2 registers a fresh one. The firing
-      // happens in the NO-DATA microbatch after batch 2 commits (the
-      // watermark moves at batch end; timers fire against the next
-      // batch's watermark), so the read must quiesce, not merely
-      // processAllAvailable — the same race class as the chained test.
-      input.addData((2L, t2, 2L, "view")); TestSpark.quiesce(q)
-      assert(timers() == Map(2L -> (t2.getTime + horizon)),
-        "the fired timer must be gone; only user 2's pending eviction remains")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(pk, v)
-        case None    => spark.conf.unset(pk)
-      }
+    graft.streaming.Door.withRocksDb(spark) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ssr3_ckpt").toString
+      def ts(x: String) = java.sql.Timestamp.valueOf(x)
+      val horizon = 60000L
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long, String)]
+      val stream = input.toDF().toDF("user_id", "ts", "event_id", "event_type")
+      val q = graft.streaming.StreamTransitions
+        .transitions(stream, watermark = "1 minute", horizonMs = horizon).toDF()
+        .writeStream.format("memory").queryName("ssr3_trans")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        def timers(): Map[Long, Long] = spark.read.format("statestore")
+          .option("readRegisteredTimers", "true").load(ckpt)
+          .selectExpr("key.value AS u", "expiration_timestamp_ms AS exp")
+          .as[(Long, Long)].collect().toMap
+        val (t1, t2) = (ts("2024-01-01 00:00:00"), ts("2024-01-02 00:00:00"))
+        input.addData((1L, t1, 1L, "view")); q.processAllAvailable()
+        assert(timers() == Map(1L -> (t1.getTime + horizon)),
+          "one pending timer at last-event + horizon after batch 1")
+        // batch 2 advances the watermark a day: user 1's timer FIRES
+        // (state evicted) and user 2 registers a fresh one. The firing
+        // happens in the NO-DATA microbatch after batch 2 commits (the
+        // watermark moves at batch end; timers fire against the next
+        // batch's watermark), so the read must quiesce, not merely
+        // processAllAvailable — the same race class as the chained test.
+        input.addData((2L, t2, 2L, "view")); TestSpark.quiesce(q)
+        assert(timers() == Map(2L -> (t2.getTime + horizon)),
+          "the fired timer must be gone; only user 2's pending eviction remains")
+      } finally q.stop()
     }
   }
 
@@ -281,43 +261,35 @@ class StateStoreReadSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val (pk, pv) = (graft.streaming.RocksDbProvider.Key,
-      graft.streaming.RocksDbProvider.Value)
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk, pv)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssr4_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ssr4_out").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val q = graft.streaming.StreamingRecentHistory
-      .run(input.toDF().toDF("seq", "user_id", "event_type"), 3, out, ckpt)
-    try {
-      input.addData((0L, 1L, "view")); q.processAllAvailable()
-      input.addData((1L, 1L, "click")); q.processAllAvailable()
-      val meta = spark.read.format("state-metadata").load(ckpt)
-        .selectExpr("operatorId", "operatorName", "stateStoreName",
-          "minBatchId", "maxBatchId")
-        .as[(Long, String, String, Long, Long)].collect()
-      // one stateful operator (transformWithState), default store name,
-      // and the batch span covering exactly the two committed batches
-      assert(meta.map(_._2).distinct.toList == List("transformWithStateExec"),
-        s"unexpected operator catalog: ${meta.toList}")
-      assert(meta.map(_._1).distinct.toList == List(0L))
-      assert(meta.map(_._3).distinct.toList == List("default"))
-      assert(meta.forall(m => m._4 == 0L && m._5 == 1L),
-        s"batch span must be [0, 1]: ${meta.toList}")
-      // and the catalog's operator is readable by the statestore source
-      // under the names the door declared — discovery is actionable
-      val vars = Seq("recent", "counts", "max_seq")
-      vars.foreach { v =>
-        assert(spark.read.format("statestore").option("stateVarName", v)
-          .load(ckpt).count() > 0L, s"cataloged var $v unreadable")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(pk, v)
-        case None    => spark.conf.unset(pk)
-      }
+    graft.streaming.Door.withRocksDb(spark) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ssr4_ckpt").toString
+      val out = java.nio.file.Files.createTempDirectory("graft_ssr4_out").toString
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
+      val q = graft.streaming.StreamingRecentHistory
+        .run(input.toDF().toDF("seq", "user_id", "event_type"), 3, out, ckpt)
+      try {
+        input.addData((0L, 1L, "view")); q.processAllAvailable()
+        input.addData((1L, 1L, "click")); q.processAllAvailable()
+        val meta = spark.read.format("state-metadata").load(ckpt)
+          .selectExpr("operatorId", "operatorName", "stateStoreName",
+            "minBatchId", "maxBatchId")
+          .as[(Long, String, String, Long, Long)].collect()
+        // one stateful operator (transformWithState), default store name,
+        // and the batch span covering exactly the two committed batches
+        assert(meta.map(_._2).distinct.toList == List("transformWithStateExec"),
+          s"unexpected operator catalog: ${meta.toList}")
+        assert(meta.map(_._1).distinct.toList == List(0L))
+        assert(meta.map(_._3).distinct.toList == List("default"))
+        assert(meta.forall(m => m._4 == 0L && m._5 == 1L),
+          s"batch span must be [0, 1]: ${meta.toList}")
+        // and the catalog's operator is readable by the statestore source
+        // under the names the door declared — discovery is actionable
+        val vars = Seq("recent", "counts", "max_seq")
+        vars.foreach { v =>
+          assert(spark.read.format("statestore").option("stateVarName", v)
+            .load(ckpt).count() > 0L, s"cataloged var $v unreadable")
+        }
+      } finally q.stop()
     }
   }
 }

@@ -1203,98 +1203,18 @@ class StreamingExtrasSpec extends AnyFunSuite {
     assert(batchRun.except(fromDisk).count() == 0)
   }
 
-  test("streamed transitions compose to the batch transitionStats on the same slice") {
+  test("StreamTransitions composes to batch transitionStats; its timer evicts") {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    // The watermarked streaming form of the e14/e15 family: feed the
-    // whole sf0.001 event log in event-time order (the ordered-ingest
-    // contract) across three uneven micro-batches that split most
-    // users' timelines, and the per-batch flatMapGroupsWithState pairs
-    // must aggregate to the batch lead()-window result bit for bit.
-    val evs = Tables.events(spark, TestSpark.sfDir)
-      .select($"user_id", $"ts".cast("timestamp").as("ts"), $"event_id",
-        $"event_type", unix_micros($"ts".cast("timestamp")).as("us"))
-      .as[(Long, java.sql.Timestamp, Long, String, Long)]
-      .collect().sortBy(e => (e._5, e._3))
-      .map(e => (e._1, e._2, e._3, e._4))
-    val batches = Seq(
-      evs.take(evs.length / 3),
-      evs.slice(evs.length / 3, 2 * evs.length / 3),
-      evs.drop(2 * evs.length / 3))
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-    val stream = input.toDF().toDF("user_id", "ts", "event_id", "event_type")
-    // Horizon wider than the 30-day log span: state eviction is the
-    // production semantics for idle users, but the equality contract
-    // needs every user to survive the batch boundaries here.
-    val q = graft.streaming.StreamTransitions
-      .transitions(stream, horizonMs = 90L * 24 * 3600 * 1000).toDF()
-      .writeStream.format("memory").queryName("st_trans")
-      .outputMode("append").start()
-    try {
-      batches.foreach { b =>
-        input.addData(b.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("st_trans")
-      .groupBy($"from_type", $"to_type")
-      .agg(count(lit(1)).as("n"), sum($"gap_us").as("total_gap_us"),
-        min($"gap_us").as("min_gap_us"), max($"gap_us").as("max_gap_us"))
-    val batchRun = graft.ops.EventOps.transitionStats(spark, TestSpark.sfDir)
-    val nStreamed = streamed.count()
-    assert(nStreamed > 0, "fixture must produce transitions")
-    assert(nStreamed == batchRun.count())
-    assert(streamed.except(batchRun).count() == 0)
-    assert(batchRun.except(streamed).count() == 0)
-    // The batch split genuinely exercised cross-batch chaining: pairs
-    // total events - users, which only holds if pairs spanning batch
-    // boundaries were emitted from remembered state.
-    val nUsers = evs.map(_._1).distinct.length
-    val totalPairs = spark.table("st_trans").count()
-    assert(totalPairs == evs.length - nUsers)
-  }
-
-  test("StreamTransitions evicts idle users at the horizon: no pair across an eviction") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-    val stream = input.toDF().toDF("user_id", "ts", "event_id", "event_type")
-    val q = graft.streaming.StreamTransitions
-      .transitions(stream, watermark = "1 minute", horizonMs = 60000L).toDF()
-      .writeStream.format("memory").queryName("st_evict")
-      .outputMode("append").start()
-    try {
-      // A's first event, then a far-future B event advances the
-      // watermark a day past A's 60 s horizon -> A's state evicts.
-      input.addData((1L, ts("2024-01-01 00:00:00"), 1L, "view")); q.processAllAvailable()
-      input.addData((2L, ts("2024-01-02 00:00:00"), 2L, "view")); q.processAllAvailable()
-      // A returns after the eviction: NO pair may bridge the gap...
-      input.addData((1L, ts("2024-01-03 00:00:00"), 3L, "click")); q.processAllAvailable()
-      // ...but the fresh state chains A's next event normally.
-      input.addData((1L, ts("2024-01-03 00:00:01"), 4L, "buy")); q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("st_evict")
-      .select($"user_id", $"from_type", $"to_type", $"gap_us").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(rows == Seq((1L, "click", "buy", 1000000L)))
-  }
-
-  test("StreamTransitions2 (transformWithState port) equals the old door and the batch form; event-time timer evicts") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val (pk, pv) = (graft.streaming.RocksDbProvider.Key,
-      graft.streaming.RocksDbProvider.Value)
-    val prev = spark.conf.getOption(pk)
-    try {
-      spark.conf.set(pk, pv)
-      // 1. Migration certificate: the port's union over the same
-      //    3-batch ordered split equals batch transitionStats (and
-      //    therefore the old flatMapGroupsWithState door, whose own
-      //    test pins the same equality).
+    graft.streaming.Door.withRocksDb(spark) {
+      // 1. The watermarked streaming form of the e14/e15 family: feed
+      //    the whole sf0.001 event log in event-time order (the
+      //    ordered-ingest contract) across three uneven micro-batches
+      //    that split most users' timelines, and the emitted pairs must
+      //    aggregate to the batch lead()-window result bit for bit.
+      //    Horizon wider than the 30-day log span: every user must
+      //    survive the batch boundaries here.
       val evs = Tables.events(spark, TestSpark.sfDir)
         .select($"user_id", $"ts".cast("timestamp").as("ts"), $"event_id",
           $"event_type", unix_micros($"ts".cast("timestamp")).as("us"))
@@ -1307,35 +1227,39 @@ class StreamingExtrasSpec extends AnyFunSuite {
         evs.drop(2 * evs.length / 3))
       val input = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
       val stream = input.toDF().toDF("user_id", "ts", "event_id", "event_type")
-      val q = graft.streaming.StreamTransitions2
+      val q = graft.streaming.StreamTransitions
         .transitions(stream, horizonMs = 90L * 24 * 3600 * 1000).toDF()
-        .writeStream.format("memory").queryName("st2_trans")
+        .writeStream.format("memory").queryName("st_trans")
         .outputMode("append").start()
       try {
         batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
       } finally q.stop()
-      val streamed = spark.table("st2_trans")
+      val streamed = spark.table("st_trans")
         .groupBy($"from_type", $"to_type")
         .agg(count(lit(1)).as("n"), sum($"gap_us").as("total_gap_us"),
           min($"gap_us").as("min_gap_us"), max($"gap_us").as("max_gap_us"))
       val batchRun = graft.ops.EventOps.transitionStats(spark, TestSpark.sfDir)
-      assert(streamed.count() == batchRun.count())
+      val nStreamed = streamed.count()
+      assert(nStreamed > 0, "fixture must produce transitions")
+      assert(nStreamed == batchRun.count())
       assert(streamed.except(batchRun).count() == 0)
       assert(batchRun.except(streamed).count() == 0)
+      // The split genuinely exercised cross-batch chaining: pairs total
+      // events - users, which only holds if pairs spanning batch
+      // boundaries were emitted from remembered state.
       val nUsers = evs.map(_._1).distinct.length
-      assert(spark.table("st2_trans").count() == evs.length - nUsers)
+      assert(spark.table("st_trans").count() == evs.length - nUsers)
 
-      // 2. The registered event-time TIMER actually evicts: same
-      //    fixture as the old door's eviction test — A idles past the
-      //    horizon, B's far-future event advances the watermark, A's
-      //    return must NOT pair across the eviction but must chain
-      //    its own fresh successor.
+      // 2. The registered event-time TIMER actually evicts: A idles
+      //    past the horizon, B's far-future event advances the
+      //    watermark a day past it, and A's return must NOT pair across
+      //    the eviction but must chain its own fresh successor.
       def ts(x: String) = java.sql.Timestamp.valueOf(x)
       val input2 = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
       val stream2 = input2.toDF().toDF("user_id", "ts", "event_id", "event_type")
-      val q2 = graft.streaming.StreamTransitions2
+      val q2 = graft.streaming.StreamTransitions
         .transitions(stream2, watermark = "1 minute", horizonMs = 60000L).toDF()
-        .writeStream.format("memory").queryName("st2_evict")
+        .writeStream.format("memory").queryName("st_evict")
         .outputMode("append").start()
       try {
         input2.addData((1L, ts("2024-01-01 00:00:00"), 1L, "view")); q2.processAllAvailable()
@@ -1343,15 +1267,10 @@ class StreamingExtrasSpec extends AnyFunSuite {
         input2.addData((1L, ts("2024-01-03 00:00:00"), 3L, "click")); q2.processAllAvailable()
         input2.addData((1L, ts("2024-01-03 00:00:01"), 4L, "buy")); q2.processAllAvailable()
       } finally q2.stop()
-      val rows = spark.table("st2_evict")
+      val rows = spark.table("st_evict")
         .select($"user_id", $"from_type", $"to_type", $"gap_us").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       assert(rows == Seq((1L, "click", "buy", 1000000L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(pk, v)
-        case None    => spark.conf.unset(pk)
-      }
     }
   }
 
@@ -1428,6 +1347,66 @@ class StreamingExtrasSpec extends AnyFunSuite {
     val streamed = rows(spark.read.parquet(s"$out/batch_id=2"))
     val batch = rows(graft.ops.Similarity.kmeansStep(spark, TestSpark.sfDir))
     assert(streamed == batch)
+  }
+
+  test("every snapshot-fold door fails with Door's message when snapshot n-1 is missing") {
+    // stateDir cleaned while the checkpoint survived: batch 1 must fail
+    // naming the missing snapshot, never fold onto empty state or die
+    // on a raw parquet path error.
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.{DataFrame, Encoder}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def ts(x: String) = java.sql.Timestamp.valueOf(x)
+    def failsWithoutSnapshot[T: Encoder](door: String, rows: Seq[T], cols: String*)(
+        run: (DataFrame, String, String, String) => StreamingQuery): Unit = {
+      val (out, st, ckpt) = (tmp("graft_miss_out"), tmp("graft_miss_state"),
+        tmp("graft_miss_ckpt"))
+      val input = MemoryStream[T]
+      val q = run(input.toDF().toDF(cols: _*), out, st, ckpt)
+      try {
+        input.addData(rows.take(rows.length / 2)); q.processAllAvailable()
+        val snap0 = new java.io.File(s"$st/batch_id=0")
+        assert(snap0.isDirectory, s"$door: batch 0 must write its snapshot")
+        org.apache.commons.io.FileUtils.deleteDirectory(snap0)
+        input.addData(rows.drop(rows.length / 2))
+        val ex = intercept[Exception](q.processAllAvailable())
+        def chain(t: Throwable): Seq[String] =
+          if (t == null) Seq.empty else t.getMessage +: chain(t.getCause)
+        assert(chain(ex).exists(m => m != null &&
+          m.contains(s"state snapshot for batch 0 missing at $st/batch_id=0")),
+          s"$door: expected Door's missing-snapshot message, got: ${chain(ex).mkString(" | ")}")
+      } finally q.stop()
+    }
+    val users = Seq(1L, 2L, 3L, 1L, 4L, 2L)
+    failsWithoutSnapshot("StreamingCms", users, "user_id")(
+      graft.streaming.StreamingCms.run)
+    failsWithoutSnapshot("StreamingGini", users, "user_id")(
+      graft.streaming.StreamingGini.run)
+    failsWithoutSnapshot("StreamingPeriodicity",
+      Seq(("view", ts("2024-01-01 00:10:00")), ("buy", ts("2024-01-01 01:10:00")),
+        ("view", ts("2024-01-02 00:10:00")), ("view", ts("2024-01-02 03:10:00"))),
+      "event_type", "ts")(graft.streaming.StreamingPeriodicity.run)
+    failsWithoutSnapshot("StreamingStickiness",
+      Seq((ts("2024-01-01 00:10:00"), 1L), (ts("2024-01-01 05:00:00"), 2L),
+        (ts("2024-01-02 00:10:00"), 1L), (ts("2024-01-03 00:10:00"), 3L)),
+      "ts", "user_id")(graft.streaming.StreamingStickiness.run)
+    failsWithoutSnapshot("StreamingLatenessAudit",
+      Seq((1L, 0L), (2L, 5000000L), (3L, 4000000L), (4L, 9000000L)),
+      "event_id", "us")(graft.streaming.StreamingLatenessAudit.run)
+    val seed = graft.streaming.StreamingKmeans.seedCodebook(spark, TestSpark.sfDir)
+    val vecs = Tables.embeddings(spark, TestSpark.sfDir)
+      .select($"vec_id", $"embedding")
+      .as[(Long, Array[Float])].collect().sortBy(_._1).take(8).toSeq
+    failsWithoutSnapshot("StreamingKmeans", vecs, "vec_id", "embedding")(
+      graft.streaming.StreamingKmeans.run(_, seed, _, _, _))
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+      .filter($"doc_id" % 5 === 0)
+      .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1).take(8).toSeq
+    failsWithoutSnapshot("StreamingClusterMaintenance", docs, "doc_id", "text")(
+      graft.streaming.StreamingClusterMaintenance.run(_, TestSpark.sfDir, _, _, _))
   }
 
   test("StreamingClusterMaintenance: streamed union-find state composes to batch d32") {
@@ -2564,60 +2543,52 @@ class StreamingExtrasSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val (pk, pv) = (graft.streaming.RocksDbProvider.Key,
-      graft.streaming.RocksDbProvider.Value)
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk, pv)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
-    val input = MemoryStream[(String, Long)]
-    // NOTE: processAllAvailable() is unusable here — a TTL'd state var
-    // in ProcessingTime mode makes the operator request another batch
-    // on every clock advance (shouldRunAnotherBatch), so "all
-    // available" never settles. Pace the empty-batch churn with a real
-    // trigger and poll the sink for each arrival's probe row instead.
-    val q = input.toDS()
-      .groupByKey(_._1)
-      .transformWithState(new TtlProcessor,
-        TimeMode.ProcessingTime(), OutputMode.Update())
-      .writeStream.format("memory").queryName("ttl_probe")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .outputMode("update").start()
-    try {
-      def probes() = spark.table("ttl_probe")
-        .as[TtlProbe].collect().toList
-      def awaitProbes(n: Int): List[TtlProbe] = {
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        var got = probes()
-        while (got.size < n && System.nanoTime() < deadline) {
-          if (q.exception.isDefined) throw q.exception.get
-          Thread.sleep(100L); got = probes()
+    graft.streaming.Door.withRocksDb(spark) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
+      val input = MemoryStream[(String, Long)]
+      // NOTE: processAllAvailable() is unusable here — a TTL'd state var
+      // in ProcessingTime mode makes the operator request another batch
+      // on every clock advance (shouldRunAnotherBatch), so "all
+      // available" never settles. Pace the empty-batch churn with a real
+      // trigger and poll the sink for each arrival's probe row instead.
+      val q = input.toDS()
+        .groupByKey(_._1)
+        .transformWithState(new TtlProcessor,
+          TimeMode.ProcessingTime(), OutputMode.Update())
+        .writeStream.format("memory").queryName("ttl_probe")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime("100 milliseconds"))
+        .outputMode("update").start()
+      try {
+        def probes() = spark.table("ttl_probe")
+          .as[TtlProbe].collect().toList
+        def awaitProbes(n: Int): List[TtlProbe] = {
+          val deadline = System.nanoTime() + 60L * 1000000000L
+          var got = probes()
+          while (got.size < n && System.nanoTime() < deadline) {
+            if (q.exception.isDefined) throw q.exception.get
+            Thread.sleep(100L); got = probes()
+          }
+          assert(got.size == n, s"expected $n probe rows, got ${got.size}")
+          got
         }
-        assert(got.size == n, s"expected $n probe rows, got ${got.size}")
-        got
-      }
-      input.addData(("k", 1L)); awaitProbes(1)
-      input.addData(("k", 2L))
-      // batch 2 ran within the 1h TTL: the long-TTL state and the
-      // control both held value 1 (the 400 ms arm races the clock —
-      // unasserted here)
-      assert(awaitProbes(2).map(p => (p.prior_long, p.prior_ctl)).toSet ==
-        Set((-1L, -1L), (1L, 1L)))
-      Thread.sleep(2000L) // far past the 400 ms TTL
-      input.addData(("k", 3L))
-      // the short-TTL value expired; the 1h state and the NONE control
-      // still hold 2
-      val last = awaitProbes(3).maxBy(_.prior_ctl)
-      assert(last.prior_ctl == 2L, "the no-TTL control must survive")
-      assert(last.prior_long == 2L, "the 1h-TTL value must survive")
-      assert(last.prior_short == -1L,
-        s"the 400ms-TTL value must be expired, still read ${last.prior_short}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(pk, v)
-        case None    => spark.conf.unset(pk)
-      }
+        input.addData(("k", 1L)); awaitProbes(1)
+        input.addData(("k", 2L))
+        // batch 2 ran within the 1h TTL: the long-TTL state and the
+        // control both held value 1 (the 400 ms arm races the clock —
+        // unasserted here)
+        assert(awaitProbes(2).map(p => (p.prior_long, p.prior_ctl)).toSet ==
+          Set((-1L, -1L), (1L, 1L)))
+        Thread.sleep(2000L) // far past the 400 ms TTL
+        input.addData(("k", 3L))
+        // the short-TTL value expired; the 1h state and the NONE control
+        // still hold 2
+        val last = awaitProbes(3).maxBy(_.prior_ctl)
+        assert(last.prior_ctl == 2L, "the no-TTL control must survive")
+        assert(last.prior_long == 2L, "the 1h-TTL value must survive")
+        assert(last.prior_short == -1L,
+          s"the 400ms-TTL value must be expired, still read ${last.prior_short}")
+      } finally q.stop()
     }
   }
 }
