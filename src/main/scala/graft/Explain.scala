@@ -1,6 +1,5 @@
 package graft
 
-
 /** Plan inspection: `runMain graft.Explain <sfDir> <query...>` prints
   * the formatted physical plan of each named query — the
   * explain-and-iterate loop the build rules call for.

@@ -54,7 +54,7 @@ object StreamTransitions {
     * (to delete it before re-registering).
     */
   final case class LastEvent(tsUs: Long, eventId: Long, tpe: String,
-                         timerMs: Long)
+      timerMs: Long)
 
   private class TransitionProcessor(horizonMs: Long)
       extends StatefulProcessor[Long, Ev, Transition] {
