@@ -33,7 +33,7 @@ private[graft] object CorpusIndexes {
 
   /** Session conf key naming the DURABLE sidecar root for the data dir
     * in use. When set and `<root>/<key>` exists (and the root's
-    * `_graft_source` marker names the same data dir), [[cached]] reads
+    * `_graft_source` marker names the same data dir), [[memo]] reads
     * the persisted bucketed table instead of rebuilding — the campaign
     * shape: indexes are built once per corpus SNAPSHOT by
     * [[persistSidecars]], and every later session (batch or streaming)
@@ -124,38 +124,61 @@ private[graft] object CorpusIndexes {
     "jm_ctx"         -> Layout(4, "w1", Seq("w1")))
 
   /** One-slot lazy holder: `computeIfAbsent` only ever constructs the
-    * holder (cheap, no callback into the cache), and the build itself
-    * runs when the caller forces `df` — AFTER the map operation has
-    * returned. Sidecar builds that read other sidecars (the CC label
-    * tables read the band index, the aHash consumers read the aHash
-    * table) therefore re-enter `cached` outside any mapping function,
+    * holder (cheap, no callback into the memo), and the build itself
+    * runs when the caller forces `value` — AFTER the map operation has
+    * returned. Builds that read other entries (the CC label tables
+    * read the band index, the BPE tables read the trained BPE)
+    * therefore re-enter the memo outside any mapping function,
     * honouring the ConcurrentHashMap contract that the mapping
     * function must not modify the map. Dependencies form a DAG, so
-    * the per-holder lazy-val locks can never cycle.
+    * the per-holder lazy-val locks can never cycle. The lazy val also
+    * serializes each key: consumers of one key wait for its one build,
+    * consumers of other keys proceed.
     */
-  private final class Holder(build: () => DataFrame) {
-    lazy val df: DataFrame = build()
+  private final class Holder(build: () => Any) {
+    lazy val value: Any = build()
   }
 
-  private val cache =
+  private val entries =
     new ConcurrentHashMap[(SparkSession, String, String), Holder]()
 
   /** Drop entries whose session is gone. A long-lived JVM that starts
     * and stops many sessions would otherwise pin every dead session's
-    * checkpointed blocks forever; purging on access keeps the cache
+    * checkpointed blocks forever; purging on access keeps the memo
     * bounded by the live sessions without needing a listener.
     */
   private def purgeStopped(): Unit = {
-    val it = cache.keySet.iterator()
+    val it = entries.keySet.iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
   }
 
-  private def cached(s: SparkSession, dir: String, key: String)
-                    (build: => DataFrame): DataFrame = {
+  /** The one per-(session, data dir, key) memo: `build` runs once per
+    * key in a session and its value lives until the session stops.
+    * It holds any value: checkpointed sidecar frames ([[memo]]) and
+    * driver-side results (the trained BPE, the s17/s19 Lloyd
+    * codebooks, the s30/s35 candidate maps). Nothing is evicted
+    * before that: every registered consumer reads one fixed key per
+    * dir (BPE at 20 merges, k-means at k = 16, MMR at 12 candidates),
+    * so a session holds a handful of entries per dir, each KBs of
+    * driver memory or a corpus-token-scale sidecar. One key names one
+    * value type; keys of driver values and of frames never overlap.
+    */
+  private[ops] def memoValue[T](s: SparkSession, dir: String, key: String)
+                               (build: => T): T = {
     purgeStopped()
-    cache.computeIfAbsent((s, dir, key), _ => new Holder(() =>
-      readDisk(s, dir, key).getOrElse(build.localCheckpoint()))).df
+    entries.computeIfAbsent((s, dir, key), _ => new Holder(() => build))
+      .value.asInstanceOf[T]
   }
+
+  /** A session sidecar frame: read from the durable sidecar root when
+    * one is configured for `dir` ([[SidecarDirKey]]), otherwise built
+    * once and `localCheckpoint`ed. Sidecars owned by other ops objects
+    * (the image aHash table, the CC label tables) use it too, so every
+    * per-session sidecar lives in one place.
+    */
+  private[ops] def memo(s: SparkSession, dir: String, key: String)
+                       (build: => DataFrame): DataFrame =
+    memoValue(s, dir, key)(readDisk(s, dir, key).getOrElse(build.localCheckpoint()))
 
   // ---- durable sidecar layer -------------------------------------
 
@@ -302,19 +325,15 @@ private[graft] object CorpusIndexes {
           // Pin the log before any rewrite: the swap must not race a
           // lazy reader, and the cleared rows must be exactly the ones
           // folded into EVERY table.
-          val pinned = ts.localCheckpoint()
+          val pinned = graft.Pinned(ts)
           try {
             tables.foreach { case (p, t, l) =>
               compactBucketedTable(s, p, t, l,
-                df => df.join(pinned, Seq(keyCol), "left_anti"))
+                df => df.join(pinned.df, Seq(keyCol), "left_anti"))
             }
             compactBucketedTable(s, path, tbl, lay,
-              df => df.join(pinned, Seq(keyCol), "left_anti"))
-          } finally pinned.queryExecution.analyzed.foreach {
-            case l: org.apache.spark.sql.execution.LogicalRDD =>
-              l.rdd.unpersist(false)
-            case _ => ()
-          }
+              df => df.join(pinned.df, Seq(keyCol), "left_anti"))
+          } finally pinned.release()
       }
     }
   }
@@ -738,14 +757,6 @@ private[graft] object CorpusIndexes {
         compactBucketedTable(s, path, tableName(root, key), layouts(key))
     }
 
-  /** The same memoize-and-checkpoint discipline for sidecars owned by
-    * other ops objects (the image aHash table, the CC label tables) —
-    * one shared cache so every per-session sidecar lives in one place.
-    */
-  private[ops] def memo(s: SparkSession, dir: String, key: String)
-                       (build: => DataFrame): DataFrame =
-    cached(s, dir, key)(build)
-
   /** (doc_id, nsh, shash): the exploded word-3-gram shingle inverted
     * index — one codegen'd `shingle_hashes` pass over the corpus.
     */
@@ -756,7 +767,7 @@ private[graft] object CorpusIndexes {
     * a decontamination service ships next to the eval suite.
     */
   def benchGrams(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "bench_grams") {
+    memo(s, dir, "bench_grams") {
       import s.implicits._
       documents(s, dir).filter($"doc_id" % 97 === 0)
         .select(explode(ngram_hashes($"text", 4)).as("g"))
@@ -764,7 +775,7 @@ private[graft] object CorpusIndexes {
     }
 
   def shingles(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "shingles") {
+    memo(s, dir, "shingles") {
       import s.implicits._
       documents(s, dir)
         .select($"doc_id", shingle_hashes($"text").as("sh"))
@@ -775,7 +786,7 @@ private[graft] object CorpusIndexes {
     * true-Jaccard recounts probe.
     */
   def tokens(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "tokens") {
+    memo(s, dir, "tokens") {
       import s.implicits._
       documents(s, dir)
         .select($"doc_id", explode(token_hashes($"text")).as("th"))
@@ -785,7 +796,7 @@ private[graft] object CorpusIndexes {
     * `minhash_bands` pass over the corpus.
     */
   def minhashBands(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "bands") {
+    memo(s, dir, "bands") {
       import s.implicits._
       documents(s, dir)
         .select($"doc_id", posexplode(minhash_bands($"text")))

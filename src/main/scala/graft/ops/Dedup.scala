@@ -331,24 +331,11 @@ object Dedup {
       driverMaxEdges: Long = 1000000L): (DataFrame, Int) = {
     import s.implicits._
     val sc = s.sparkContext
-    // localCheckpoint pins its blocks in the block manager until the
-    // driver GCs the RDD — which in a long session (the bench runs this
-    // loop ~9 times: d11/d13/d19 × repeats) never happens promptly, so
-    // superseded rounds accumulate as dead pinned blocks. Track the
-    // persistent-RDD ids each checkpoint creates and free them
-    // explicitly the moment they are superseded; only the FINAL label
-    // table (which the returned plan references) stays pinned.
-    // The RDD is read EXPLICITLY off the checkpointed plan's LogicalRDD
-    // leaf (never a getPersistentRDDs diff, which would capture RDDs a
-    // CONCURRENT component pins and unpersist them out from under it).
-    def tracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint()
-      (out, out.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      })
-    }
-    def free(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdds.foreach(_.unpersist(blocking = false))
+    // Superseded rounds are released the moment they are superseded
+    // (graft.Pinned): the bench runs this loop ~9 times a session
+    // (d11/d13/d19 × repeats), and dead pinned rounds would pile up.
+    // Only the FINAL label table (which the returned plan references)
+    // stays pinned.
     // Materialize the pair list ONCE before the symmetrizing
     // self-union — unioning the lazy frame with itself would run the
     // whole candidate pipeline twice.
@@ -359,16 +346,17 @@ object Dedup {
     // path even though the driver fast path reads positionally. The
     // projection also prunes the payload column out of the
     // checkpointed edge blocks.
-    val (pairs, pairsRdds) = tracked(
+    val pairsPin = graft.Pinned(
       pairsDf.select(pairsDf.columns(0), pairsDf.columns(1))
         .toDF("doc_a", "doc_b"))
+    val pairs = pairsPin.df
     // Deployments tune the gate without a code change; the parameter
     // default stays the documented ~16 MB edge bound.
     val maxEdges = s.conf.getOption("spark.graft.cc.driverMaxEdges")
       .map(_.toLong).getOrElse(driverMaxEdges)
     if (pairs.count() <= maxEdges) {
       val edgeArr = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-      free(pairsRdds)
+      pairsPin.release()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -394,11 +382,12 @@ object Dedup {
       return (sc.parallelize(labeled, math.max(1, sc.defaultParallelism / 4))
         .toDF("doc_id", "cluster_id"), 0)
     }
-    val (edges, edgesRdds) = tracked(
+    val edgesPin = graft.Pinned(
       pairs.union(pairs.select($"doc_b", $"doc_a")).toDF("src", "dst"))
+    val edges = edgesPin.df
     // Seed = min(node, min(neighbors)): the first neighbor step fused
     // into initialization (one aggregate instead of a full round).
-    var (labels, labelsRdds) = tracked(
+    var labels = graft.Pinned(
       edges.select($"dst".as("node"), $"src".as("lbl"))
         .union(edges.select($"src".as("node"), $"src".as("lbl")))
         .groupBy($"node").agg(min($"lbl").as("lbl")))
@@ -407,36 +396,35 @@ object Dedup {
     // change-detection join.
     // coalesce: an empty edge set (legal for callers like m12 on a
     // corpus with no near-dups) sums to NULL, not 0.
-    var lblSum = labels.agg(coalesce(sum($"lbl"), lit(0L))).head.getLong(0)
+    var lblSum = labels.df.agg(coalesce(sum($"lbl"), lit(0L))).head.getLong(0)
     var converged = false
     var rounds = 0
     while (!converged && rounds < 64) {
       // (1) neighbor min
-      val prop = edges.join(labels, edges("src") === labels("node"))
+      val prop = edges.join(labels.df, edges("src") === labels.df("node"))
         .select($"dst".as("node"), $"lbl".as("nlbl"))
         .groupBy($"node").agg(min($"nlbl").as("nlbl"))
-      val stepped = labels.join(prop, Seq("node"), "left")
+      val stepped = labels.df.join(prop, Seq("node"), "left")
         .select($"node", least($"lbl", coalesce($"nlbl", $"lbl")).as("lbl"))
       // (2) pointer jump: lbl := lbl(lbl) (labels are node ids, every
       // label has a row, so the inner join is total). A second jump per
       // round was measured and does NOT help — the extra self-join
       // costs what the saved round would have.
       val ptr = stepped.select($"node".as("p_node"), $"lbl".as("p_lbl"))
-      val (next, nextRdds) = tracked(
+      val next = graft.Pinned(
         stepped.join(ptr, stepped("lbl") === ptr("p_node"))
           .select($"node", least($"lbl", $"p_lbl").as("lbl")))
-      val nextSum = next.agg(coalesce(sum($"lbl"), lit(0L))).head.getLong(0)
+      val nextSum = next.df.agg(coalesce(sum($"lbl"), lit(0L))).head.getLong(0)
       converged = nextSum == lblSum
       lblSum = nextSum
-      free(labelsRdds) // superseded round — its blocks are dead now
+      labels.release() // superseded round — its blocks are dead now
       labels = next
-      labelsRdds = nextRdds
       rounds += 1
     }
     // The candidate graph is never referenced past the loop.
-    free(pairsRdds)
-    free(edgesRdds)
-    (labels.select($"node".as("doc_id"), $"lbl".as("cluster_id")), rounds)
+    pairsPin.release()
+    edgesPin.release()
+    (labels.df.select($"node".as("doc_id"), $"lbl".as("cluster_id")), rounds)
   }
 
   /** Incremental dedup — the shape production actually runs: a NEW

@@ -1374,34 +1374,39 @@ object EventOps {
     val nRanges = s.conf.getOption("spark.graft.pareto.ranges")
       .map(_.toInt).getOrElse(s.conf.get("spark.sql.shuffle.partitions").toInt)
     // Pin the range layout across both passes (the q31 rationale: the
-    // boundary sample must not redraw between stats and rank).
-    val ranged = counts
+    // boundary sample must not redraw between stats and rank). The
+    // result is ONE row, so it is collected while the layout is pinned
+    // and the pin is released: StreamingGini calls this every trigger
+    // and must leave no blocks behind.
+    val ranged = graft.Pinned(counts
       .repartitionByRange(nRanges, $"c".asc, $"user_id".asc)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val stats = ranged.groupBy($"pid").agg(count(lit(1)).as("pcnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    // Empty input: emit the ONE row the DuckDB oracle (and the
-    // StreamingGini one-row-per-tick contract) produces — count 0,
-    // NULL sums, NULL gini. A limit(0) frame here would write an
-    // EMPTY tick and hash-mismatch the oracle's single NULL row.
-    if (stats.isEmpty)
-      return counts.agg(count(lit(1)).as("n_users"),
-          sum($"c").as("n_events"), sum($"c").as("gini_num"))
-        .withColumn("gini", lit(null).cast("double"))
-    val offsets = stats.toList.scanLeft((0, 0L)) { case ((_, acc), (pid, n)) =>
-      (pid, acc + n)
-    }.sliding(2).collect { case List((_, off), (pid, _)) => (pid, off) }.toList
-    val nUsers = stats.map(_._2).sum
-    val off = offsets.toDF("pid", "rk_off")
-    val w = Window.partitionBy($"pid").orderBy($"c".asc, $"user_id".asc)
-    ranged.join(broadcast(off), Seq("pid"))
-      .withColumn("rk", row_number().over(w).cast("long") + $"rk_off")
-      .agg(count(lit(1)).as("n_users"), sum($"c").as("n_events"),
-        sum(($"rk" * 2 - lit(nUsers + 1L)) * $"c").as("gini_num"))
-      .select($"n_users", $"n_events", $"gini_num",
-        ($"gini_num".cast("double") /
-          (lit(nUsers) * $"n_events").cast("double")).as("gini"))
+      .withColumn("pid", spark_partition_id()))
+    try {
+      val stats = ranged.df.groupBy($"pid").agg(count(lit(1)).as("pcnt"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      // Empty input: emit the ONE row the DuckDB oracle (and the
+      // StreamingGini one-row-per-tick contract) produces — count 0,
+      // NULL sums, NULL gini. A limit(0) frame here would write an
+      // EMPTY tick and hash-mismatch the oracle's single NULL row.
+      if (stats.isEmpty)
+        return counts.agg(count(lit(1)).as("n_users"),
+            sum($"c").as("n_events"), sum($"c").as("gini_num"))
+          .withColumn("gini", lit(null).cast("double"))
+      val offsets = stats.toList.scanLeft((0, 0L)) { case ((_, acc), (pid, n)) =>
+        (pid, acc + n)
+      }.sliding(2).collect { case List((_, off), (pid, _)) => (pid, off) }.toList
+      val nUsers = stats.map(_._2).sum
+      val off = offsets.toDF("pid", "rk_off")
+      val w = Window.partitionBy($"pid").orderBy($"c".asc, $"user_id".asc)
+      val gini = ranged.df.join(broadcast(off), Seq("pid"))
+        .withColumn("rk", row_number().over(w).cast("long") + $"rk_off")
+        .agg(count(lit(1)).as("n_users"), sum($"c").as("n_events"),
+          sum(($"rk" * 2 - lit(nUsers + 1L)) * $"c").as("gini_num"))
+        .select($"n_users", $"n_events", $"gini_num",
+          ($"gini_num".cast("double") /
+            (lit(nUsers) * $"n_events").cast("double")).as("gini"))
+      s.createDataFrame(java.util.Arrays.asList(gini.collect(): _*), gini.schema)
+    } finally ranged.release()
   }
 
   /** e35 — SPIKE ATTRIBUTION: the incident-response query behind

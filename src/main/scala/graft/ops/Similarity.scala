@@ -272,49 +272,37 @@ object Similarity {
     * and s35 memo bodies would otherwise each run the identical
     * shortlist + pairwise-cosine jobs (two corpus scans for
     * byte-identical driver maps); plain driver maps, so a session
-    * cache entry costs KBs.
+    * memo entry ([[CorpusIndexes.memoValue]]) costs KBs. Both
+    * intermediate checkpoints are released once the maps are
+    * collected.
     */
-  private val candSimsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (Map[Long, Double], Map[(Long, Long), Double])]()
-
-  /** Mirror of CorpusIndexes.purgeStopped for this driver-map cache:
-    * drop entries whose session is gone so a long-lived JVM that
-    * cycles sessions never pins dead SparkSession references.
-    */
-  private def purgeStoppedCandSims(): Unit = {
-    val it = candSimsCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
-
   private def mmrCandSims(s: SparkSession, dir: String, nCand: Int)
-      : (Map[Long, Double], Map[(Long, Long), Double]) = {
-    purgeStoppedCandSims()
-    candSimsCache.computeIfAbsent((s, dir, nCand),
-      _ => mmrCandSimsBuild(s, dir, nCand))
-  }
+      : (Map[Long, Double], Map[(Long, Long), Double]) =
+    CorpusIndexes.memoValue(s, dir, s"mmr_cand_$nCand")(mmrCandSimsBuild(s, dir, nCand))
 
   private def mmrCandSimsBuild(s: SparkSession, dir: String, nCand: Int)
       : (Map[Long, Double], Map[(Long, Long), Double]) = {
     import s.implicits._
-    val e = normedVectors(s, dir).localCheckpoint()
-    val q = e.filter($"vec_id" === 0L).toDF("q_id", "q_emb", "q_nrm")
+    val e = graft.Pinned(normedVectors(s, dir))
+    val q = e.df.filter($"vec_id" === 0L).toDF("q_id", "q_emb", "q_nrm")
     val wq = Window.partitionBy($"q_id").orderBy($"rel".desc, $"vec_id")
-    val cand = e.crossJoin(broadcast(q)).filter($"vec_id" =!= $"q_id")
+    val cand = graft.Pinned(e.df.crossJoin(broadcast(q)).filter($"vec_id" =!= $"q_id")
       .withColumn("rel",
         cosinePrenormed(vec_dot($"q_emb", $"embedding"), $"q_nrm", $"nrm"))
       .withColumn("crank", row_number().over(wq))
       .filter($"crank" <= nCand)
-      .select($"vec_id", $"embedding", $"nrm", $"rel")
-      .localCheckpoint()
-    val rels = cand.select($"vec_id", $"rel").collect()
+      .select($"vec_id", $"embedding", $"nrm", $"rel"))
+    val rels = cand.df.select($"vec_id", $"rel").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val a = cand.toDF("id_a", "emb_a", "nrm_a", "rel_a")
-    val b = cand.toDF("id_b", "emb_b", "nrm_b", "rel_b")
+    val a = cand.df.toDF("id_a", "emb_a", "nrm_a", "rel_a")
+    val b = cand.df.toDF("id_b", "emb_b", "nrm_b", "rel_b")
     val sims = a.join(b, $"id_a" =!= $"id_b")
       .withColumn("sim",
         cosinePrenormed(vec_dot($"emb_a", $"emb_b"), $"nrm_a", $"nrm_b"))
       .select($"id_a", $"id_b", $"sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    cand.release()
+    e.release()
     (rels, sims)
   }
 
@@ -1948,26 +1936,20 @@ object Similarity {
     * codebook-sized (2·K·64 rows) built from the driver-held KB
     * codebook, the kmeansTrain discipline.
     */
-  /** The two-iteration training result, memoized per (session, dir):
-    * s17 (the oracle certificate) and s19 (serving on the trained
-    * codebook) share ONE training run — the driver-side KB-codebook
-    * analog of the CorpusIndexes sidecar discipline.
+  /** The two-iteration training result, a session memo entry per
+    * (session, dir, k) ([[CorpusIndexes.memoValue]]): s17 (the oracle
+    * certificate) and s19 (serving on the trained codebook) share ONE
+    * training run — the driver-side KB-codebook analog of the
+    * CorpusIndexes sidecar discipline.
     */
-  private val twoStepCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (Array[Array[Double]], Double, Array[Long], Array[Array[Double]], Double, Array[Long])]()
-
-  private def twoStepTrained(s: SparkSession, dir: String, k: Int = 16) = {
-    val it = twoStepCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    twoStepCache.computeIfAbsent((s, dir), _ => {
+  private def twoStepTrained(s: SparkSession, dir: String, k: Int = 16) =
+    CorpusIndexes.memoValue(s, dir, s"kmeans_two_step_$k") {
       val corpus = kmeansCorpus(s, dir)
       val seed = kmeansSeed(corpus, k)
       val (c1, sse1, _, n1) = lloydIter(s, corpus, seed)
       val (c2, sse2, _, n2) = lloydIter(s, corpus, c1)
       (c1, sse1, n1, c2, sse2, n2)
-    })
-  }
+    }
 
   def kmeansTwoStep(s: SparkSession, dir: String, k: Int = 16): DataFrame = {
     import s.implicits._

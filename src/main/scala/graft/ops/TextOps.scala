@@ -1695,106 +1695,27 @@ object TextOps {
     // Session sidecar (the dupClusterLabels discipline): the merge
     // table is a per-corpus-snapshot ARTIFACT — train once, read
     // everywhere (t21 packing / t27 mixtures tokenize with it).
-    withBpeTrained(s, dir, nMerges) { (merges, _) =>
-      CorpusIndexes.memo(s, dir, s"bpe_merges_$nMerges") {
-        import s.implicits._
-        s.sparkContext.parallelize(merges, 1)
-          .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-          .orderBy($"merge_rank")
-      }
+    CorpusIndexes.memo(s, dir, s"bpe_merges_$nMerges") {
+      import s.implicits._
+      s.sparkContext.parallelize(bpeTrained(s, dir, nMerges)._1, 1)
+        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
+        .orderBy($"merge_rank")
     }
 
-  /** Shared per-(session, dir, nMerges) trained-BPE artifact: the
-    * merge list and the FINAL vocabulary state, trained ONCE per
-    * session — t43/t44/t46 all derive from this one entry, so the
-    * 20-round training loop never reruns within a session. The final
-    * vocabulary frame is vocabulary-sized (tens of rows on this
-    * corpus, ~10⁵ in production), so one pinned checkpoint costs KBs;
-    * the loop already frees every superseded intermediate. The cache
-    * is a 4-entry LRU: a long-lived session sweeping many corpora or
-    * nMerges values unpersists the eldest entry's checkpoint RDDs
-    * instead of growing block-manager residency without bound (every
-    * registered consumer materializes its own CorpusIndexes.memo
-    * checkpoint eagerly at first build, so an evicted entry has no
-    * live downstream lineage). Purge-on-access keeps dead sessions
-    * out (the CorpusIndexes.purgeStopped discipline).
+  /** The trained BPE of one corpus: the merge list and the FINAL
+    * vocabulary state (word, n, syms), a session memo entry
+    * ([[CorpusIndexes.memoValue]]) trained ONCE per (session, dir,
+    * nMerges), so t43/t44/t46 share one 20-round training loop. The
+    * vocabulary frame stays pinned for the session; it is
+    * vocabulary-sized (tens of rows on this corpus, ~10⁵ in
+    * production), so KBs.
     */
-  private type BpeEntry =
-    (Seq[(Int, String, String, Long)], DataFrame, Seq[org.apache.spark.rdd.RDD[_]])
-  /** One cache slot: the trained value (built lazily under THIS
-    * holder's monitor — never under the map lock), a refcount of
-    * in-flight consumers, and the eviction mark. An evicted entry's
-    * checkpoint RDDs unpersist when the LAST consumer releases (or
-    * immediately at eviction when none is in flight) — local
-    * checkpoints sever lineage, so evict-during-use would fail the
-    * consumer's job unrecoverably, not slow it.
-    */
-  private final class BpeHolder {
-    var value: BpeEntry = _ // guarded by this
-    val refs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var evicted = false
-    def unpersistAll(): Unit = {
-      val v = value
-      if (v != null)
-        v._3.foreach(r => if (!r.sparkContext.isStopped) r.unpersist(false))
+  private def bpeTrained(s: SparkSession, dir: String, nMerges: Int)
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    CorpusIndexes.memoValue(s, dir, s"bpe_trained_$nMerges") {
+      val (merges, words) = bpeTrain(s, documents(s, dir).select(col("text")), nMerges)
+      (merges, words.df)
     }
-  }
-  private val bpeCacheMax = 4
-  private val bpeCache =
-    new java.util.LinkedHashMap[(SparkSession, String, Int), BpeHolder](
-      16, 0.75f, true)
-
-  /** Per-(session, dir, nMerges) serialization, GLOBAL map lock held
-    * only for map bookkeeping: an earlier version ran the whole
-    * 20-round training job AND the consumer's memo materialization
-    * under one JVM-wide monitor, so a slow training job on one corpus
-    * blocked unrelated sessions/directories indefinitely. Now the
-    * build runs under the entry's own monitor (same-key consumers
-    * wait, different keys proceed), `f` runs under no lock at all,
-    * and eviction safety is kept by the holder's refcount instead of
-    * a critical section.
-    */
-  private def withBpeTrained[T](s: SparkSession, dir: String, nMerges: Int)
-      (f: (Seq[(Int, String, String, Long)], DataFrame) => T): T = {
-    val key = (s, dir, nMerges)
-    val holder = bpeCache.synchronized {
-      // purge dead sessions (their contexts are stopped — nothing to
-      // unpersist; mark evicted so late releasers don't resurrect)
-      val it = bpeCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1.sparkContext.isStopped) {
-          e.getValue.evicted = true; it.remove()
-        }
-      }
-      var h = bpeCache.get(key)
-      if (h == null) {
-        h = new BpeHolder
-        bpeCache.put(key, h)
-        while (bpeCache.size() > bpeCacheMax) {
-          val eldest = bpeCache.entrySet().iterator().next()
-          bpeCache.remove(eldest.getKey)
-          val ev = eldest.getValue
-          ev.evicted = true
-          if (ev.refs.get() == 0) ev.unpersistAll()
-        }
-      }
-      h.refs.incrementAndGet()
-      h
-    }
-    try {
-      val v = holder.synchronized {
-        if (holder.value == null)
-          holder.value =
-            bpeTrain(s, documents(s, dir).select(col("text")), nMerges)
-        holder.value
-      }
-      f(v._1, v._2)
-    } finally {
-      if (holder.refs.decrementAndGet() == 0 && holder.evicted)
-        holder.unpersistAll()
-    }
-  }
 
   /** t44 — the trained segmentation APPLIED: the per-word subword
     * split the t43 merge table produces, with its frequency and
@@ -1807,14 +1728,12 @@ object TextOps {
     * the whole table.
     */
   def bpeSegmentation(s: SparkSession, dir: String, nMerges: Int = 20): DataFrame =
-    withBpeTrained(s, dir, nMerges) { (_, words) =>
-      CorpusIndexes.memo(s, dir, s"bpe_seg_$nMerges") {
-        import s.implicits._
-        words.select($"word", $"n",
-            size($"syms").cast("long").as("n_syms"),
-            array_join($"syms", "|").as("seg"))
-          .orderBy($"n".desc, $"word").limit(200)
-      }
+    CorpusIndexes.memo(s, dir, s"bpe_seg_$nMerges") {
+      import s.implicits._
+      bpeTrained(s, dir, nMerges)._2.select($"word", $"n",
+          size($"syms").cast("long").as("n_syms"),
+          array_join($"syms", "|").as("seg"))
+        .orderBy($"n".desc, $"word").limit(200)
     }
 
   /** t46 — TOKEN-BUDGET EFFICIENCY of the trained tokenizer, per
@@ -1838,10 +1757,10 @@ object TextOps {
     * also read, so this query never retrains.
     */
   def bpeEfficiency(s: SparkSession, dir: String, nMerges: Int = 20): DataFrame =
-    withBpeTrained(s, dir, nMerges) { (_, words) =>
-      CorpusIndexes.memo(s, dir, s"bpe_eff_$nMerges") {
+    CorpusIndexes.memo(s, dir, s"bpe_eff_$nMerges") {
       import s.implicits._
-      val vocab = words.select($"word", size($"syms").cast("long").as("n_syms"))
+      val vocab = bpeTrained(s, dir, nMerges)._2
+        .select($"word", size($"syms").cast("long").as("n_syms"))
       documents(s, dir)
         .select($"source", explode(split($"text", "\\s+")).as("word"))
         .filter($"word" =!= "")
@@ -1856,7 +1775,6 @@ object TextOps {
         .withColumn("chars_per_subtok",
           $"n_chars".cast("double") / $"n_subtokens".cast("double"))
         .orderBy($"source")
-      }
     }
 
   /** The DuckDB replay of [[bpeEfficiency]]: the t43/t44 stage chain
@@ -1883,36 +1801,25 @@ object TextOps {
   private[graft] def bpeMergesFrame(s: SparkSession, docs: DataFrame,
                                     nMerges: Int): DataFrame = {
     import s.implicits._
-    val (merges, _, rdds) = bpeTrain(s, docs, nMerges)
-    rdds.foreach(_.unpersist(blocking = false))
+    val (merges, words) = bpeTrain(s, docs, nMerges)
+    words.release()
     s.sparkContext.parallelize(merges, 1)
       .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
       .orderBy($"merge_rank")
   }
 
-  /** The shared training loop: returns the merge list, the FINAL
-    * vocabulary state (word, n, syms — checkpointed; its pinned RDDs
-    * are returned so the caller frees them after taking what it
-    * needs), and those RDDs.
+  /** The shared training loop: returns the merge list and the FINAL
+    * vocabulary state (word, n, syms), still pinned; the caller
+    * releases it when done with it. Superseded rounds are released
+    * as they die.
     */
   private def bpeTrain(s: SparkSession, docs: DataFrame, nMerges: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame,
-         Seq[org.apache.spark.rdd.RDD[_]]) = {
+      : (Seq[(Int, String, String, Long)], graft.Pinned) = {
     import s.implicits._
-    val sc = s.sparkContext
-    // The RDD is read EXPLICITLY off the checkpointed plan's LogicalRDD
-    // leaf (never a getPersistentRDDs diff, which would capture RDDs a
-    // CONCURRENT component pins and unpersist them out from under it).
-    def tracked(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint()
-      (out, out.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      })
-    }
     // coalesce(8): every training round schedules 2 jobs over this
     // table; at vocabulary scale 8 tasks/job keeps 20 rounds of
     // scheduling overhead bounded without an extra shuffle.
-    var (words, wordsRdds) = tracked(
+    var words = graft.Pinned(
       docs.select(explode(split($"text", "\\s+")).as("word"))
         .filter($"word" =!= "")
         .groupBy($"word").agg(count(lit(1)).as("n"))
@@ -1922,7 +1829,7 @@ object TextOps {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false
     for (k <- 1 to nMerges if !done) {
-      val top = words
+      val top = words.df
         .select($"n", explode(expr(
           "transform(slice(syms, 1, size(syms)-1), (x, i) -> struct(x AS a, syms[i+1] AS b))")).as("p"))
         .groupBy($"p.a".as("a"), $"p.b".as("b")).agg(sum($"n").as("cnt"))
@@ -1940,13 +1847,12 @@ object TextOps {
               get(acc, size(acc) - 1) === lit(a) && x === lit(b),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(x))))
-        val (next, nextRdds) = tracked(words.select($"word", $"n", applied.as("syms")))
-        wordsRdds.foreach(_.unpersist(blocking = false))
+        val next = graft.Pinned(words.df.select($"word", $"n", applied.as("syms")))
+        words.release()
         words = next
-        wordsRdds = nextRdds
       }
     }
-    (merges.toSeq, words, wordsRdds)
+    (merges.toSeq, words)
   }
 
   /** The DuckDB replay of [[bpeMergeTable]]: `n` chained MATERIALIZED

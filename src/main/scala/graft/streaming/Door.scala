@@ -51,9 +51,19 @@ object Door {
       .option("checkpointLocation", checkpointDir)
       .start()
 
-  /** Overwrite `stateDir/batch_id=<n>` with batch n's state. */
-  def snapshot(state: DataFrame, stateDir: String, batchId: Long): Unit =
-    state.write.mode("overwrite").parquet(dir(stateDir, batchId))
+  /** Overwrite `stateDir/batch_id=<n>` with batch n's state and return
+    * the snapshot read back. The write already materializes the state
+    * durably, so a door that reads its state again this trigger (to
+    * emit from it) reads these files: the state is computed once, and
+    * no block stays pinned after the trigger, as a per-trigger
+    * `localCheckpoint` would. The read passes the state's own schema,
+    * so it needs no schema-inference job.
+    */
+  def snapshot(state: DataFrame, stateDir: String, batchId: Long): DataFrame = {
+    val at = dir(stateDir, batchId)
+    state.write.mode("overwrite").parquet(at)
+    state.sparkSession.read.schema(state.schema).parquet(at)
+  }
 
   /** The state snapshot batch `batchId − 1` wrote; `None` for batch 0.
     *

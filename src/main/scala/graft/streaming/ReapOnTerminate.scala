@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Run-scoped resource reaping for streaming doors: [[install]] starts
@@ -66,33 +66,21 @@ object ReapOnTerminate {
   }
 
   /** Run `body` (typically a batch of localCheckpoint loads) and
-    * return its result plus a reap closure that unpersists exactly
-    * the RDDs `body` pinned through the `pin` callback it receives —
-    * `pin(df)` localCheckpoints the frame and records the RDD backing
-    * the checkpoint, read EXPLICITLY off the checkpointed plan's
-    * LogicalRDD leaf. An earlier version diffed the session-global
-    * `getPersistentRDDs` map around `body`; that diff captured RDDs
-    * pinned CONCURRENTLY by other components (a second door starting
-    * in parallel, a CorpusIndexes.memo build), and reaping those
-    * severed the other component's lineage-free checkpoints
-    * unrecoverably. Explicit collection has no such window.
+    * return its result plus a reap closure that releases exactly the
+    * [[graft.Pinned]] checkpoints `body` took through the `pin`
+    * callback it receives (`pin(df)` returns the checkpointed frame).
+    * Other components' pins, taken concurrently, are never reaped: see
+    * [[graft.Pinned]] for why the RDDs are not found by a diff.
     */
-  def tracked[T](s: SparkSession)(
-      body: (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) => T)
+  def tracked[T](s: SparkSession)(body: (DataFrame => DataFrame) => T)
       : (T, () => Unit) = {
-    val pinned =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    val pin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = { df =>
-      val cp = df.localCheckpoint()
-      cp.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          pinned.synchronized { pinned += l.rdd }
-        case _ => ()
-      }
-      cp
+    val pins = scala.collection.mutable.ArrayBuffer.empty[graft.Pinned]
+    val out = body { df =>
+      val p = graft.Pinned(df)
+      pins.synchronized { pins += p }
+      p.df
     }
-    val out = body(pin)
-    val rdds = pinned.synchronized(pinned.toList)
-    (out, () => rdds.foreach(_.unpersist(false)))
+    val taken = pins.synchronized(pins.toList)
+    (out, () => taken.foreach(_.release()))
   }
 }

@@ -44,13 +44,14 @@ object StreamingAnn {
     * a caller passing the lazy `ivfIndex` frame would otherwise
     * re-execute the full corpus IVF assignment on every micro-batch —
     * the per-batch cost must scale with the batch, so the corpus-sized
-    * work happens exactly once (idempotent if the caller already
-    * checkpointed, as the tests do).
+    * work happens exactly once. The pin is released when the query
+    * terminates ([[ReapOnTerminate]]).
     */
   def run(queries: DataFrame, index: DataFrame, outDir: String,
           checkpointDir: String): StreamingQuery = {
-    val idx = index.localCheckpoint()
-    runWith(queries, idx, outDir, checkpointDir)
+    val (idx, reap) = ReapOnTerminate.tracked(queries.sparkSession)(pin => pin(index))
+    ReapOnTerminate.install(queries.sparkSession,
+      start = () => runWith(queries, idx, outDir, checkpointDir), reap = reap)
   }
 
   /** Start the job against the DURABLE index: `sidecarRoot` is a dir

@@ -49,13 +49,17 @@ object StreamingAnnIngest {
           checkpointDir: String): StreamingQuery = {
     val s = arrivals.sparkSession
     // the FROZEN persisted codebook is the only part of the index the
-    // assignment needs; materialize it once per run (≤16 rows).
+    // assignment needs; materialize it once per run (≤16 rows) and
+    // release it when the query terminates.
     // (Never re-derive from index rows: a prior upsert may have
     // appended arrivals with vec_id < 16.)
-    val cb = graft.ops.Similarity.loadIvfCodebook(s, indexDir).localCheckpoint()
-    Door.sink(arrivals, deltaDir, checkpointDir) { (batch, _) =>
-      graft.ops.Similarity.ivfAssignOverCodebook(batch, cb)
-    }
+    val (cb, reap) = ReapOnTerminate.tracked(s)(pin =>
+      pin(graft.ops.Similarity.loadIvfCodebook(s, indexDir)))
+    ReapOnTerminate.install(s,
+      start = () => Door.sink(arrivals, deltaDir, checkpointDir) { (batch, _) =>
+        graft.ops.Similarity.ivfAssignOverCodebook(batch, cb)
+      },
+      reap = reap)
   }
 
   /** The serving view over a durable index plus its accumulated

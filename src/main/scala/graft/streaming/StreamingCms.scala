@@ -36,12 +36,10 @@ object StreamingCms {
           checkpointDir: String): StreamingQuery = {
     Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
       val arrivals = graft.ops.EventOps.cmsOver(graft.ops.EventOps.userCounts(batch))
-      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+      val folded = Door.previous(batch.sparkSession, stateDir, batchId)
         .fold(arrivals)(_.unionByName(arrivals)
           .groupBy(col("i"), col("j")).agg(sum(col("cnt")).as("cnt")))
-        .localCheckpoint()
-      Door.snapshot(st, stateDir, batchId)
-      st
+      Door.snapshot(folded, stateDir, batchId)
     }
   }
 }

@@ -38,12 +38,10 @@ object StreamingGini {
           checkpointDir: String): StreamingQuery = {
     Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
       val arrivals = graft.ops.EventOps.userCounts(batch)
-      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+      val folded = Door.previous(batch.sparkSession, stateDir, batchId)
         .fold(arrivals)(_.unionByName(arrivals)
           .groupBy(col("user_id")).agg(sum(col("c")).as("c")))
-        .localCheckpoint()
-      Door.snapshot(st, stateDir, batchId)
-      graft.ops.EventOps.giniOver(st)
+      graft.ops.EventOps.giniOver(Door.snapshot(folded, stateDir, batchId))
     }
   }
 }

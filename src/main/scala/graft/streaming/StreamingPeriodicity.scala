@@ -42,12 +42,10 @@ object StreamingPeriodicity {
           checkpointDir: String): StreamingQuery = {
     Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
       val arrivals = graft.ops.EventOps.hourlyCounts(batch)
-      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+      val folded = Door.previous(batch.sparkSession, stateDir, batchId)
         .fold(arrivals)(_.unionByName(arrivals)
           .groupBy(col("event_type"), col("h")).agg(sum(col("c")).as("c")))
-        .localCheckpoint()
-      Door.snapshot(st, stateDir, batchId)
-      graft.ops.EventOps.periodicityOver(st)
+      graft.ops.EventOps.periodicityOver(Door.snapshot(folded, stateDir, batchId))
     }
   }
 }

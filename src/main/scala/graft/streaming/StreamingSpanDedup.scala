@@ -28,7 +28,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingSpanDedup {
 
-  /** Start the job. `index` is the in-session gram set; pass
+  /** Start the job. `index` is the in-session gram set, pinned for
+    * the run and released when the query terminates; pass
     * `indexDir = Some(root)` to stand entirely on the durable
     * `span_grams` sidecar instead (index may then be null).
     */
@@ -36,11 +37,15 @@ object StreamingSpanDedup {
           checkpointDir: String, indexDir: Option[String] = None,
           l: Int = 20): StreamingQuery = {
     val session = newDocs.sparkSession
-    val idx = indexDir
-      .map(root => graft.ops.Dedup.loadSpanGramIndex(session, root))
-      .getOrElse(index.localCheckpoint())
-    Door.sink(newDocs, outDir, checkpointDir) { (batch, _) =>
-      graft.ops.Dedup.incrementalSpanRows(batch, idx, l)
+    val (idx, reap) = ReapOnTerminate.tracked(session) { pin =>
+      indexDir
+        .map(root => graft.ops.Dedup.loadSpanGramIndex(session, root))
+        .getOrElse(pin(index))
     }
+    ReapOnTerminate.install(session,
+      start = () => Door.sink(newDocs, outDir, checkpointDir) { (batch, _) =>
+        graft.ops.Dedup.incrementalSpanRows(batch, idx, l)
+      },
+      reap = reap)
   }
 }

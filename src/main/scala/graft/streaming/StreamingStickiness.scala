@@ -41,11 +41,9 @@ object StreamingStickiness {
           checkpointDir: String): StreamingQuery = {
     Door.sink(events, outDir, checkpointDir) { (batch, batchId) =>
       val arrivals = graft.ops.EventOps.dayUserActivity(batch)
-      val st = Door.previous(batch.sparkSession, stateDir, batchId)
+      val folded = Door.previous(batch.sparkSession, stateDir, batchId)
         .fold(arrivals)(_.union(arrivals).distinct())
-        .localCheckpoint()
-      Door.snapshot(st, stateDir, batchId)
-      graft.ops.EventOps.stickinessOver(st)
+      graft.ops.EventOps.stickinessOver(Door.snapshot(folded, stateDir, batchId))
     }
   }
 }

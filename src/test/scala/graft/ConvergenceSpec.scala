@@ -68,6 +68,22 @@ class ConvergenceSpec extends AnyFunSuite {
     assert(leaked <= 1, s"$leaked checkpointed RDD sets still pinned after convergence")
   }
 
+  test("BPE training frees every checkpoint: bpeMergesFrame leaves nothing pinned") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = Seq("aaa aaa abab low lower lowest", "low low newer newest")
+      .toDF("text")
+    val before = sc.getPersistentRDDs.keySet
+    // six merges: seven checkpointed vocabulary tables (the seed and
+    // one per round), each released once superseded or, for the last,
+    // once the merge list is taken
+    val merges = graft.ops.TextOps.bpeMergesFrame(spark, docs, 6).collect()
+    assert(merges.length == 6, "a short run cannot witness the frees")
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"${leaked.size} BPE checkpoint RDDs still pinned")
+  }
+
   test("driver union-find fast path labels bit-identically to the distributed loop") {
     val spark = TestSpark.spark
     import spark.implicits._

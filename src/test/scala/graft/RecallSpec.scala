@@ -162,6 +162,20 @@ class RecallSpec extends AnyFunSuite {
     info(s"recall@5 hits across queries: trained $trainedHits vs seed $seedHits (exact ${5 * exact5.size})")
   }
 
+  test("s17 two-step k-means is memoized per k: k = 8 after the default k = 16 trains at most 8 cells") {
+    val spark0 = spark
+    import spark0.implicits._
+    import graft.ops.Similarity
+    // the default call leaves its k = 16 result in the session memo; a
+    // memo keyed on (session, dir) alone would serve it to k = 8
+    assert(Similarity.kmeansTwoStep(spark, dir).count() > 0)
+    val cells = Similarity.kmeansTwoStep(spark, dir, 8)
+      .groupBy($"iter").agg(org.apache.spark.sql.functions.countDistinct($"cell_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cells.keySet == Set(1L, 2L))
+    cells.foreach { case (it, n) => assert(n <= 8, s"iter $it has $n cells at k = 8") }
+  }
+
   test("s18 navigation crosses cell boundaries: the walk recovers a neighbor the cell scan misses") {
     val spark0 = spark
     import spark0.implicits._

@@ -2341,6 +2341,31 @@ class StreamingExtrasSpec extends AnyFunSuite {
     assert(tick0 == prefix)
   }
 
+  test("StreamingGini pins nothing per trigger: the persistent-RDD set does not grow with triggers") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val sc = spark.sparkContext
+    val users = graft.Tables.events(spark, TestSpark.sfDir)
+      .select("user_id").as[Long].collect()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_gini_res_ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_gini_res_out").toString
+    val st = java.nio.file.Files.createTempDirectory("graft_gini_res_state").toString
+    val input = MemoryStream[Long]
+    val before = sc.getPersistentRDDs.keySet
+    val q = graft.streaming.StreamingGini.run(input.toDF().toDF("user_id"), out, st, ckpt)
+    val pinned = try {
+      users.grouped((users.length + 4) / 5).toSeq.map { part =>
+        input.addData(part.toSeq); q.processAllAvailable()
+        (sc.getPersistentRDDs.keySet -- before).size
+      }
+    } finally q.stop()
+    assert(pinned.length >= 4, s"only ${pinned.length} triggers ran")
+    assert(new java.io.File(out).list().count(_.startsWith("batch_id=")) == pinned.length)
+    assert(pinned.forall(_ == pinned.head),
+      s"pinned RDDs per trigger grew: ${pinned.mkString(", ")}")
+  }
+
   test("StreamingCms: final sketch equals batch CMS; state constant-size; replay exactly-once") {
     val spark = TestSpark.spark
     import spark.implicits._
